@@ -9,12 +9,13 @@ list nor groupBy can do this alone.)
 
 Algorithm: alternating min-label propagation to convergence.  Each round
 every node adopts the minimum label in its closed neighborhood; rounds
-are DataFrame join+groupBy (shuffle on node id), with localCheckpoint
-lineage truncation per round — the same loop discipline as the ranking
-core (plans/iterate.py).  Rounds needed ≈ graph diameter; dedup-cluster
-graphs (LSH buckets ∪ verified pairs) have tiny diameters, so 3-5 rounds
-close them.  The convergence check piggybacks a count on the round's
-materialization — one job per round, matching ranking.py's early-stop.
+are DataFrame join+groupBy (shuffle on node id).  Every fixpoint loop in
+this module (min-label, star contraction, the SCC trim/color/mark
+phases) is a round body handed to
+:func:`~bigdata_hits_spark.plans.iterate.fixpoint`, which owns the
+lineage cut, check cadence, stop test and round budget.  Rounds needed
+≈ graph diameter; dedup-cluster graphs (LSH buckets ∪ verified pairs)
+have tiny diameters, so 3-5 rounds close them.
 
 At 1000-executor scale the per-round cost is one shuffle of (node,
 label) pairs — compact longs/strings, never document bodies.  For
@@ -27,9 +28,11 @@ the same (pairs in, labels out) contract.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, functions as F
 
-from bigdata_hits_spark.plans.iterate import materialize
+from bigdata_hits_spark.plans.iterate import fixpoint, materialize
 
 
 def connected_components(
@@ -59,38 +62,37 @@ def connected_components(
         edges.select(F.col("src").alias("id")).distinct().withColumn("component", F.col("id"))
     )
 
-    for _ in range(max_iter):
+    def relabel(state: DataFrame) -> DataFrame:
         # Min label over the closed neighborhood: neighbor labels flow
         # across edges, then each node keeps min(own, incoming).
+        labels = state.select("id", "component")
         incoming = (
             edges.join(labels, edges["src"] == labels["id"])
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("component").alias("nbr_min"))
         )
-        updated = (
-            labels.join(incoming, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))).alias(
-                    "component"
-                ),
-                (F.col("nbr_min") < F.col("component")).alias("changed"),
-            )
+        return labels.join(incoming, "id", "left").select(
+            "id",
+            F.least(F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))).alias(
+                "component"
+            ),
+            (F.col("nbr_min") < F.col("component")).alias("changed"),
         )
-        # Lazy checkpoint; the changed-count below triggers it — one job
-        # per round instead of checkpoint + count.
-        updated = updated.localCheckpoint(eager=False)
-        n_changed = updated.filter(F.col("changed")).count()
-        labels = updated.drop("changed")
-        if n_changed == 0:
-            return labels
-    if escalate:
-        return connected_components_star(pairs, id1, id2)
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds; "
-        "the pair graph has a longer diameter than a dedup clustering "
-        "should — raise max_iter or switch to a star-contraction variant"
+
+    labels, _, converged = fixpoint(
+        labels, relabel, _n_changed, max_rounds=max_iter,
+        name="connected_components", strict=not escalate,
     )
+    if not converged:
+        return connected_components_star(pairs, id1, id2)
+    return labels.select("id", "component")
+
+
+def _n_changed(state: DataFrame) -> int:
+    """Rows the last round changed — the measure of every monotone
+    label/mark fixpoint here (labels only decrease, marks only grow, so
+    a round that changes nothing is the fixpoint)."""
+    return state.filter(F.col("changed")).count()
 
 
 def _neighborhood_mins(edges: DataFrame) -> DataFrame:
@@ -118,8 +120,9 @@ def connected_components_star(
     small-star moves smaller-or-equal ones.  The edge set contracts
     toward a star per component whose center is the component minimum; a
     fixpoint means every node is directly attached to its root.
-    Convergence is detected by an (edge count, hash-sum) fingerprint —
-    two cheap aggregates, no edge-set diff join.
+    Convergence is an unchanged (edge count, hash-sum) fingerprint —
+    two cheap aggregates, no edge-set diff join — checked by
+    :func:`~bigdata_hits_spark.plans.iterate.fixpoint` every round.
     """
     fwd = pairs.select(F.col(id1).alias("src"), F.col(id2).alias("dst"))
     rev = pairs.select(F.col(id2).alias("src"), F.col(id1).alias("dst"))
@@ -144,17 +147,17 @@ def connected_components_star(
         ).first()
         return row["n"], row["h"]
 
-    fp = _fingerprint(edges)
-    for _ in range(max_iter):
+    def contract(edges: DataFrame) -> DataFrame:
         # Large-star: strictly larger neighbors attach to the
-        # closed-neighborhood min.
+        # closed-neighborhood min.  The lazy cut keeps the small-star
+        # half from recomputing it on each of its two reads.
         mins = _neighborhood_mins(edges)
         large = (
             edges.join(mins, edges["src"] == mins["id"])
             .filter(F.col("dst") > F.col("src"))
             .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
         )
-        edges = materialize(_sym(large))
+        edges = _sym(large).localCheckpoint(eager=False)
         # Small-star: smaller-or-equal neighbors attach to the min of the
         # smaller neighborhood (plus self).
         oriented = edges.filter(F.col("dst") <= F.col("src"))
@@ -164,13 +167,12 @@ def connected_components_star(
             .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
             .unionByName(small_mins.select(F.col("id").alias("src"), F.col("m").alias("dst")))
         )
-        edges = materialize(_sym(small))
-        new_fp = _fingerprint(edges)
-        if new_fp == fp:
-            break
-        fp = new_fp
-    else:
-        raise RuntimeError(f"star contraction did not converge in {max_iter} rounds")
+        return _sym(small)
+
+    edges, _, _ = fixpoint(
+        edges, contract, _fingerprint, max_rounds=max_iter, until="stable",
+        name="star contraction",
+    )
 
     # Fixpoint edge set is a symmetrized star per component: each node's
     # minimum neighbor is its root; roots (min themselves) map to self.
@@ -214,6 +216,52 @@ def dedup_survivors(
     return docs.join(drops, id_col, "left_anti")
 
 
+def _trim_round(e: DataFrame) -> DataFrame:
+    """One SCC trim round: keep the edges whose endpoints both have an
+    in-edge and an out-edge (a node missing either is its own SCC)."""
+    core = (
+        e.select(F.col("dst").alias("id"))
+        .distinct()
+        .join(e.select(F.col("src").alias("id")).distinct(), "id", "left_semi")
+        .localCheckpoint(eager=False)
+    )
+    return e.join(core.select(F.col("id").alias("src")), "src", "left_semi").join(
+        core.select(F.col("id").alias("dst")), "dst", "left_semi"
+    ).select("src", "dst")
+
+
+def _color_round(prop: DataFrame, state: DataFrame) -> DataFrame:
+    """One SCC coloring round: every node takes the minimum color over
+    itself and its in-neighbors along ``prop``."""
+    labels = state.select("id", "color")
+    incoming = (
+        prop.join(labels, prop["src"] == labels["id"])
+        .groupBy(F.col("dst").alias("id"))
+        .agg(F.min("color").alias("in_min"))
+    )
+    return labels.join(incoming, "id", "left").select(
+        "id",
+        F.least(F.col("color"), F.coalesce(F.col("in_min"), F.col("color"))).alias("color"),
+        (F.col("in_min") < F.col("color")).alias("changed"),
+    )
+
+
+def _mark_round(intra: DataFrame, state: DataFrame) -> DataFrame:
+    """One SCC backward-mark round: every predecessor of a marked node
+    along the intra-color edges ``intra`` becomes marked."""
+    mark = state.select("id", "color", "m")
+    preds = (
+        intra.join(mark.filter(F.col("m")).select(F.col("id").alias("dst")), "dst", "left_semi")
+        .select(F.col("src").alias("id"))
+        .distinct()
+        .withColumn("pm", F.lit(True))
+    )
+    pm = F.coalesce(F.col("pm"), F.lit(False))
+    return mark.join(preds, "id", "left").select(
+        "id", "color", (F.col("m") | pm).alias("m"), (~F.col("m") & pm).alias("changed")
+    )
+
+
 def strongly_connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -254,16 +302,15 @@ def strongly_connected_components(
        raises loudly rather than mislabeling, and the path-doubling
        shortcuts collapse most deep condensations well before the bound.
 
-    Loop discipline: every fixpoint loop runs ``check_every`` rounds
-    between convergence counts — all three updates are MONOTONE (labels
-    only decrease / marks and trims only grow), so "the latest round
-    changed nothing" is exactly convergence, and the intermediate
-    rounds chain as lazy ``localCheckpoint``s that the batch-end count
-    materializes in one job.  This trades <= check_every - 1 no-op
-    label shuffles (cheap: scalar frames) for a ~check_every reduction
-    in action count, which is what dominates iterative wall time.  At
-    1000-executor scale each round is one hash exchange of the label
-    frame, keyed on node id.
+    Loop discipline: trim, color and mark each run on
+    :func:`~bigdata_hits_spark.plans.iterate.fixpoint` with one check
+    per ``check_every`` rounds.  Color and mark are MONOTONE (labels
+    only decrease, marks only grow), so a check that sees no changed
+    row is exactly convergence; trim stops when the edge count stops
+    moving.  Batching trades <= check_every - 1 no-op rounds (cheap:
+    scalar frames) for a ~check_every reduction in action count, which
+    is what dominates iterative wall time.  At 1000-executor scale each
+    round is one hash exchange of the label frame, keyed on node id.
 
     Round-count accelerator: before the color phase, the post-trim edge
     set is augmented with SHORTCUT edges by guarded path-doubling —
@@ -300,31 +347,13 @@ def strongly_connected_components(
         # deferred: the trimmed singletons are one anti-join against the
         # final core after the fixpoint); convergence is |e| stabilizing
         # — an unchanged edge set has unchanged in/out supports, so the
-        # next core is identical.  Batched like the label loops.
+        # next core is identical, and every endpoint of it is core.
         orig_nodes = nodes
-        core = nodes
-        n_prev = e.count()
-        for r in range(max_rounds):
-            core = (
-                e.select(F.col("dst").alias("id"))
-                .distinct()
-                .join(e.select(F.col("src").alias("id")).distinct(), "id", "left_semi")
-                .localCheckpoint(eager=False)
-            )
-            e = e.join(core.select(F.col("id").alias("src")), "src", "left_semi").join(
-                core.select(F.col("id").alias("dst")), "dst", "left_semi"
-            ).select("src", "dst").localCheckpoint(eager=False)
-            # Check round 0 too: a trim-free graph (dense core, or the
-            # straggler residue of a later outer round) exits after one
-            # cheap round instead of burning a whole batch of no-ops.
-            if r == 0 or (r + 1) % check_every == 0 or r == max_rounds - 1:
-                n_now = e.count()
-                if n_now == n_prev:
-                    break
-                n_prev = n_now
-        else:
-            raise RuntimeError(f"scc trim did not converge in {max_rounds} rounds")
-        nodes = materialize(core)
+        e, _, _ = fixpoint(
+            e, _trim_round, DataFrame.count, max_rounds=max_rounds,
+            check_every=check_every, until="stable", name="scc trim",
+        )
+        nodes = materialize(e.select(F.col("src").alias("id")).distinct())
         parts.append(
             materialize(
                 orig_nodes.join(nodes, "id", "left_anti").select(
@@ -334,7 +363,6 @@ def strongly_connected_components(
         )
         if nodes.isEmpty():
             continue
-        e = materialize(e)
 
         # 1b) Guarded path-doubling: augment with shortcut edges while
         # the size budget holds (see docstring).  ``prop`` drives the
@@ -361,31 +389,11 @@ def strongly_connected_components(
 
         # 2) Forward min-label coloring to fixpoint.
         labels = materialize(nodes.select("id", F.col("id").alias("color")))
-        converged = False
-        for r in range(max_rounds):
-            incoming = (
-                prop.join(labels, prop["src"] == labels["id"])
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min("color").alias("in_min"))
-            )
-            updated = (
-                labels.join(incoming, "id", "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("color"), F.coalesce(F.col("in_min"), F.col("color"))
-                    ).alias("color"),
-                    (F.col("in_min") < F.col("color")).alias("changed"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            labels = updated.drop("changed")
-            if (r + 1) % check_every == 0 or r == max_rounds - 1:
-                if updated.filter(F.col("changed")).count() == 0:
-                    converged = True
-                    break
-        if not converged:
-            raise RuntimeError(f"scc coloring did not converge in {max_rounds} rounds")
+        labels, _, _ = fixpoint(
+            labels, partial(_color_round, prop), _n_changed, max_rounds=max_rounds,
+            check_every=check_every, name="scc coloring",
+        )
+        labels = labels.select("id", "color")
 
         # 3) Backward confinement along intra-color edges from the roots.
         lsrc = labels.select(F.col("id").alias("src"), F.col("color").alias("c_src"))
@@ -399,39 +407,10 @@ def strongly_connected_components(
         mark = materialize(
             labels.select("id", "color", (F.col("id") == F.col("color")).alias("m"))
         )
-        converged = False
-        for r in range(max_rounds):
-            preds = (
-                intra.join(
-                    mark.filter(F.col("m")).select(F.col("id").alias("dst")),
-                    "dst",
-                    "left_semi",
-                )
-                .select(F.col("src").alias("id"))
-                .distinct()
-                .withColumn("pm", F.lit(True))
-            )
-            updated = (
-                mark.join(preds, "id", "left")
-                .select(
-                    "id",
-                    "color",
-                    (F.col("m") | F.coalesce(F.col("pm"), F.lit(False))).alias("m"),
-                    (~F.col("m") & F.coalesce(F.col("pm"), F.lit(False))).alias(
-                        "changed"
-                    ),
-                )
-                .localCheckpoint(eager=False)
-            )
-            mark = updated.drop("changed")
-            if (r + 1) % check_every == 0 or r == max_rounds - 1:
-                if updated.filter(F.col("changed")).count() == 0:
-                    converged = True
-                    break
-        if not converged:
-            raise RuntimeError(
-                f"scc backward mark did not converge in {max_rounds} rounds"
-            )
+        mark, _, _ = fixpoint(
+            mark, partial(_mark_round, intra), _n_changed, max_rounds=max_rounds,
+            check_every=check_every, name="scc backward mark",
+        )
 
         found = materialize(
             mark.filter(F.col("m")).select("id", F.col("color").alias("scc"))

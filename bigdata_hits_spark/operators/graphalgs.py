@@ -22,28 +22,19 @@ Scale notes:
   deterministic and engine-portable).  Each round is the (edge, label)
   attach plus two codegen hash-aggregates ((id, community) count, then
   per-node struct-min), with localCheckpoint lineage truncation on a
-  cadence exactly like ranking/components.
+  fixed cadence — k rounds, no convergence test.
+- k-core and k-truss peel to a fixpoint on
+  :func:`~bigdata_hits_spark.plans.iterate.fixpoint`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from bigdata_hits_spark.plans.iterate import materialize, materialize_counted
+from bigdata_hits_spark.plans.iterate import fixpoint, materialize
 
 #: Label-propagation rounds between lineage truncations (see loop note).
 _LP_CHECKPOINT_EVERY = 4
-
-
-def _lp_round_body() -> str:
-    """Which label-propagation round body to run: ``"two_stage"``
-    (default — the recorded full-bench winner) or ``"fused"`` (the
-    single deterministic-mode aggregate, kept selectable via
-    ``SPARK_GRAFT_LP_BODY=fused`` so the A/B stays reproducible under
-    full-session pressure; see the in-loop comments for the record)."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_LP_BODY", "two_stage")
 
 
 def symmetric_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -292,11 +283,7 @@ def clustering_coefficient_from_layout(
 #: 4.53s vs encoded 5.10s (encode cost > 3 rounds of long-key savings),
 #: k=8 string 11.4s vs encoded 8.76s (-23%); under multi-query memory
 #: pressure the encoded plan ties-or-wins even at k=3 (4.79 vs 4.97 min,
-#: 5.87 vs 7.49 worst).  Crossover ~k=4-5.  (Measured under the
-#: two-stage round body, which is again the default: the fused
-#: deterministic-mode body won quiet interleaved A/Bs by ~28% but
-#: regressed 2.2-2.8x in BOTH round-6 full-bench records — see the
-#: round-body comments inside label_propagation.)
+#: 5.87 vs 7.49 worst).  Crossover ~k=4-5.
 _LP_ENCODE_MIN_K = 4
 
 
@@ -361,51 +348,22 @@ def label_propagation(
         attach = work.join(labels, work["b"] == labels["id"]).select(
             F.col("a").alias("id"), "community"
         )
-        if _lp_round_body() == "fused":
-            # min-of-mode as ONE deterministic-mode aggregate: Spark's
-            # mode(col, deterministic=true) returns the LOWEST value
-            # among the most-frequent — a single ObjectHashAggregate
-            # (per-id count-map buffer) replacing two hash-agg exchanges
-            # per round with one id-keyed exchange.  A quiet interleaved
-            # A/B (scripts/ab_lp_mode.py) had this winning by ~28%, but
-            # BOTH round-6 full-run records moved the other way — driver
-            # k=6 6.92s -> 19.33s (2.8x), k=3 4.86s -> 10.52s — because
-            # ObjectHashAggregate's per-group map buffers fall back to
-            # sort-based aggregation past
-            # spark.sql.objectHashAggregate.sortBased.fallbackThreshold
-            # (default 128 groups) and thrash object memory in a warm
-            # ~157-query session, conditions the quiet A/B never hit.
-            # Round-7 full-session re-A/B (scripts/ab_lp_fullsession.py:
-            # one 156-query pressure pass, then 3 interleaved passes
-            # with a per-pass canary): fused k6 = 56.2/6.8/5.5 s vs
-            # two-stage 8.0/9.5/11.0 s — fused wins the min but its
-            # worst pass is catastrophic ON AN IDLE-CANARY PASS (0.162),
-            # reproducing the driver-record pathology.  Stability wins
-            # for a gated bench: kept selectable, NOT the default.
-            labels = attach.groupBy("id").agg(
-                F.mode("community", True).alias("community")
+        # Min-of-mode as an (id, community) count, then a per-id struct-min;
+        # not F.mode, whose ObjectHashAggregate sort fallback thrashes under load.
+        labels = (
+            attach.groupBy("id", "community")
+            .agg(F.count(F.lit(1)).alias("freq"))
+            .groupBy("id")
+            .agg(
+                F.min(
+                    F.struct(
+                        (F.lit(0) - F.col("freq")).alias("neg_freq"),
+                        F.col("community").alias("community"),
+                    )
+                ).alias("best")
             )
-        else:
-            # Two-stage round body — the recorded full-bench winner
-            # (see the fused branch's history): a codegen'd
-            # (id, community) count with primitive buffers, then a
-            # per-id struct-min.  Two exchanges per round, but both
-            # stay inside whole-stage codegen with map-side partials
-            # and never touch ObjectHashAggregate's fallback path.
-            labels = (
-                attach.groupBy("id", "community")
-                .agg(F.count(F.lit(1)).alias("freq"))
-                .groupBy("id")
-                .agg(
-                    F.min(
-                        F.struct(
-                            (F.lit(0) - F.col("freq")).alias("neg_freq"),
-                            F.col("community").alias("community"),
-                        )
-                    ).alias("best")
-                )
-                .select("id", F.col("best.community").alias("community"))
-            )
+            .select("id", F.col("best.community").alias("community"))
+        )
         # Unlike the ranking loop there is NO per-round driver scalar, so
         # rounds compose into one lazy plan and the whole propagation runs
         # as a single job; checkpoint on a cadence only to bound plan
@@ -440,10 +398,10 @@ def k_core(
     the standard densification/cleaning step before community or ranking
     analysis (peripheral tendrils drop out, the cohesive core remains).
 
-    Peeling loop with the engine's usual discipline: per round, compute
-    degrees on the surviving symmetric edge set (one key-only shuffle),
-    drop under-degree nodes (semi-join), truncate lineage, stop when a
-    round removes nothing.  Rounds needed = peeling depth, typically
+    Peeling loop on :func:`~bigdata_hits_spark.plans.iterate.fixpoint`:
+    per round, compute degrees on the surviving symmetric edge set (one
+    key-only shuffle) and drop under-degree nodes (semi-join); the
+    harness cuts lineage and stops when the edge count stops moving.  Rounds needed = peeling depth, typically
     small on real web/dedup graphs; each round's cost shrinks with the
     surviving edge set.  Deterministic: peeling is simultaneous (all
     under-k nodes drop each round), which yields the same fixpoint as
@@ -451,9 +409,9 @@ def k_core(
 
     Escalation (same pattern as components.py's star-contraction
     switch): a pathological graph — a long chain of just-under-k
-    degrees — peels one layer per round, so past ``max_iter``
-    materialized rounds the loop DOUBLES the number of lazy peels folded
-    into each materialization.  Progress per action then grows
+    degrees — peels one layer per round, so when ``max_iter`` rounds
+    do not converge the loop re-enters the harness with a round body
+    that DOUBLES the number of lazy peels folded into each round.  Progress per action then grows
     geometrically and any peeling depth D completes in
     O(max_iter + log D) actions instead of raising.
     """
@@ -469,32 +427,26 @@ def k_core(
             .select("a", "b")
         )
 
-    n_prev = None
-    peels_per_round = 1
-    rounds = 0
-    while True:
-        rounds += 1
-        nxt = sym
-        for i in range(peels_per_round):
-            nxt = peel_once(nxt)
-            # Lazy lineage cut between folded peels: each peel's plan
-            # stays 2-joins-1-agg deep no matter how many are batched
-            # (a 32-peel lazy chain would otherwise hand Catalyst a
-            # ~100-join plan and planning time, not execution, explodes).
-            # eager=False: still ONE action per materialized round.
-            if i + 1 < peels_per_round:
-                nxt = nxt.localCheckpoint(eager=False)
-        # Lazy checkpoint; the count triggers it — one job per
-        # materialized round instead of checkpoint + count.
-        sym = nxt.localCheckpoint(eager=False)
-        n = sym.count()
-        # Counts are monotonically non-increasing, so an unchanged count
-        # across >= 1 peel means every inner peel was a no-op: fixpoint.
-        if n == 0 or (n_prev is not None and n == n_prev):
-            break
-        n_prev = n
-        if rounds >= max_iter:
-            peels_per_round *= 2
+    sym, _, converged = fixpoint(
+        sym, peel_once, DataFrame.count, max_rounds=max_iter, until="stable",
+        name="k_core", strict=False,
+    )
+    if not converged:
+        folds = 1
+
+        def folded(s: DataFrame) -> DataFrame:
+            nonlocal folds
+            folds *= 2
+            for i in range(folds):
+                # Lazy cut between folded peels: each peel's plan stays
+                # 2-joins-1-agg deep however many are batched (a 32-peel
+                # chain would hand Catalyst a ~100-join plan).
+                s = peel_once(s if i == 0 else s.localCheckpoint(eager=False))
+            return s
+
+        sym, _, _ = fixpoint(
+            sym, folded, DataFrame.count, max_rounds=None, until="stable", name="k_core"
+        )
     return sym.select(F.col("a").alias("id")).distinct()
 
 
@@ -1026,25 +978,23 @@ def k_truss(
     treatment at components.py): the loop is self-bounding — a round
     either drops at least one edge (the materialized count, a
     non-negative integer, strictly decreases) or drops none and
-    returns, so the peel finishes in at most |oriented edges| rounds
+    returns, so the peel finishes in at most |oriented edges| + 1 rounds
     with NO arbitrary constant.  Peeling depth is graph-dependent (a
     chain of overlapping cliques cascades one edge per round —
     tests/test_graphalgs.py pins a 45-deep construction), so the old
     ``max_iter=40`` default could spuriously fail a graph the
     algorithm handles fine.  ``max_iter`` remains as an OPT-IN budget
     for callers who would rather fail loudly than peel deep; the
-    default (None) runs to the fixpoint.  Per-round
-    :func:`~bigdata_hits_spark.plans.iterate.materialize_counted`
-    keeps both lineage AND the Catalyst size estimate flat regardless
-    of depth (a bare checkpoint compounds the estimate x3/round —
-    see plans/iterate.py)."""
+    default (None) runs to the fixpoint.  The rounds run on
+    :func:`~bigdata_hits_spark.plans.iterate.fixpoint`, whose
+    guarded per-round cut keeps both lineage AND the Catalyst size
+    estimate flat regardless of depth (a bare checkpoint compounds the
+    estimate x3/round — see plans/iterate.py)."""
     if sym is None:
         sym = symmetric_edges(edges, src, dst)
     ori = materialize(_oriented(sym))
-    n_prev = ori.count()
-    rounds = 0
-    while max_iter is None or rounds < max_iter:
-        rounds += 1
+
+    def peel(ori: DataFrame) -> DataFrame:
         tri = _triangles_from_oriented(ori)
         # Member edges in orientation coordinates: u->v, u->w, v->w are
         # all oriented edges by construction of the wedge + closing join.
@@ -1058,23 +1008,13 @@ def k_truss(
             ).alias("e")
         ).select("e.lo", "e.hi")
         sup = tri_edges.groupBy("lo", "hi").agg(F.count(F.lit(1)).alias("support"))
-        # materialize_counted, NOT a bare lazy checkpoint: the left join
-        # against support counts derived from ``ori`` itself triples the
-        # size-estimate's bit-length per round if the origin stats are
-        # copied through — see plans/iterate.py materialize for the
-        # measured BigInteger blow-up this prevents.
-        ori, n = materialize_counted(
+        return (
             ori.join(sup, ["lo", "hi"], "left")
             .filter(F.coalesce(F.col("support"), F.lit(0)) >= k - 2)
             .select("lo", "hi", "deg_hi")
         )
-        if n == n_prev:
-            return ori.select(
-                F.least("lo", "hi").alias("lo"), F.greatest("lo", "hi").alias("hi")
-            )
-        n_prev = n
-    raise RuntimeError(
-        f"k_truss did not converge in {max_iter} rounds; "
-        "peeling depth exceeds the opt-in budget — raise max_iter or "
-        "pass max_iter=None (the default) to run to the fixpoint"
+
+    ori, _, _ = fixpoint(
+        ori, peel, DataFrame.count, max_rounds=max_iter, until="stable", name="k_truss"
     )
+    return ori.select(F.least("lo", "hi").alias("lo"), F.greatest("lo", "hi").alias("hi"))

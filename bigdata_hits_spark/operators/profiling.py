@@ -751,15 +751,26 @@ def _power_iterate_local(
     already absorbs: the division by the irrational norm keeps every
     rounded cell off the half-boundary landmine (see PCA_ITER_DIGITS)
     — re-verified cell-exact against the unrolled-CTE oracles at
-    sf0.01 and sf0.1.  Returns (v, lam)."""
+    sf0.01 and sf0.1.  Returns (v, lam).
+
+    Degenerate input: when ``C v`` is all zeros — an all-zero
+    covariance (constant vectors), or a v in C's null space after
+    deflation — there is no direction to normalize, so iteration stops
+    and the current v is returned with ``lam = 0.0``: zero variance
+    reads as eigenvalue 0 instead of a ZeroDivisionError.  An empty
+    matrix (no dims) returns ``([], 0.0)``."""
     import math
 
     d = len(C)
+    if d == 0:
+        return [], 0.0
     v = [_round_half_up(1.0 / math.sqrt(d), PCA_ITER_DIGITS)] * d
     nrm = 0.0
     for _ in range(iters):
         w = [math.fsum(C[i][j] * v[j] for j in range(d)) for i in range(d)]
         nrm = math.sqrt(math.fsum(x * x for x in w))
+        if nrm == 0.0:
+            break
         v = [_round_half_up(x / nrm, PCA_ITER_DIGITS) for x in w]
     return v, _round_half_up(nrm, PCA_ITER_DIGITS)
 

@@ -147,6 +147,23 @@ def _make_damp(
     raise ValueError(f"unknown teleport mode {mode!r}")
 
 
+def _within_tol(cur: DataFrame, prev: DataFrame | None, tol: float | None) -> bool:
+    """Opt-in early stop of the power loops (beyond-reference; the
+    reference is fixed-k): True when the L-inf delta between successive
+    normalized (id, score) vectors is within ``tol``.  Both sides are
+    slim projections over pinned checkpoints, so a check is one extra
+    vector-sized job per iteration."""
+    if tol is None or prev is None:
+        return False
+    delta = (
+        cur.alias("cur")
+        .join(prev.alias("prv"), F.col("cur.id") == F.col("prv.id"), "inner")
+        .agg(F.max(F.abs(F.col("cur.score") - F.col("prv.score"))))
+        .first()[0]
+    )
+    return delta is not None and delta <= tol
+
+
 def _power_iterate(
     edges_hub: DataFrame,
     edges_auth: DataFrame,
@@ -210,21 +227,9 @@ def _power_iterate(
         nrm = auths_raw.agg(norm_expr).first()[0]
         auths = auths_raw.select("id", (F.col("score") / F.lit(nrm)).alias("score"))
         done += 1
-        if tol is not None:
-            # Convergence check (beyond-reference; the reference is
-            # fixed-k): L-inf delta of successive normalized auth vectors.
-            # Both sides are slim projections over pinned checkpoints, so
-            # this is one extra vector-sized job per iteration — opt-in.
-            if prev is not None:
-                delta = (
-                    auths.alias("cur")
-                    .join(prev.alias("prv"), F.col("cur.id") == F.col("prv.id"), "inner")
-                    .agg(F.max(F.abs(F.col("cur.score") - F.col("prv.score"))))
-                    .first()[0]
-                )
-                if delta is not None and delta <= tol:
-                    break
-            prev = auths
+        if _within_tol(auths, prev, tol):
+            break
+        prev = auths
     hubs = normalized(hubs_raw, norm)
     return RankResult(hubs=_sorted(hubs), auths=_sorted(auths), iterations=done)
 
@@ -557,7 +562,6 @@ def pagerank(
     teleport = F.lit((1.0 - beta) / float(n))
     scores = graph.nodes.select("id", F.lit(1.0 / float(n)).alias("score"))
     prev = None
-    done = 0
     for _ in range(k):
         contrib = _step(ea, scores, mode)
         contrib = F.broadcast(contrib) if mode == "broadcast" else contrib.hint("shuffle_hash")
@@ -569,20 +573,10 @@ def pagerank(
             (F.lit(beta) * F.coalesce(F.col("score"), F.lit(0.0)) + teleport).alias("score"),
         ).localCheckpoint(eager=False)
         nrm = scores_raw.agg(F.sum("score").alias("__norm")).first()[0]
-        scores_new = scores_raw.select("id", (F.col("score") / F.lit(nrm)).alias("score"))
-        done += 1
-        if tol is not None and prev is not None:
-            delta = (
-                scores_new.alias("cur")
-                .join(prev.alias("prv"), F.col("cur.id") == F.col("prv.id"), "inner")
-                .agg(F.max(F.abs(F.col("cur.score") - F.col("prv.score"))))
-                .first()[0]
-            )
-            if delta is not None and delta <= tol:
-                scores = scores_new
-                break
-        prev = scores_new
-        scores = scores_new
+        scores = scores_raw.select("id", (F.col("score") / F.lit(nrm)).alias("score"))
+        if _within_tol(scores, prev, tol):
+            break
+        prev = scores
     return _sorted(scores)
 
 

@@ -1,17 +1,26 @@
-"""Iteration harness helpers: in-plan normalization + lineage truncation.
+"""Iteration harness: in-plan normalization, lineage truncation, and the
+one fixpoint driver every convergence loop runs on.
 
 The reference's power loops collect the norm scalar to the driver twice per
 iteration and never cache, so every action recomputes a lineage that grows
-with the iteration count and re-reads the input CSVs
-(``/root/reference/src/base_hits.py:16-19,53-64``; SURVEY §3.1, §4.2).
+with the iteration count and re-reads the input CSVs (the reference's
+``base_hits.py``; SURVEY §3.1, §4.2).  Here the norm stays *in the plan*
+(:func:`normalized`) and lineage is truncated with ``localCheckpoint``,
+which also bounds the logical-plan blowup across iterations (SURVEY §4.3).
 
-Here the norm stays *in the plan* — a one-row aggregate cross-joined back
-with an explicit broadcast hint, so no driver round-trip — and lineage is
-truncated with ``localCheckpoint`` on a fixed cadence, which also bounds
-the logical-plan blowup across iterations (SURVEY §4.3).
+Convergence loops (connected components, star contraction, the three SCC
+fixpoints, k-core, k-truss) are supersteps in the Pregelix sense: one
+join+group-by round body, repeated until nothing moves.  They differ only
+in that body and in what they count, so :func:`fixpoint` owns everything
+else — the per-round lineage cut, the check cadence, the stop test and
+the round budget — and the operators pass a step and a measure.
+Fixed-k loops (HITS/SALSA/PageRank, label propagation, BFS, feature
+propagation) have no convergence test and keep their own cadence.
 """
 
 from __future__ import annotations
+
+from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -52,11 +61,30 @@ def _stats_reset(df: DataFrame) -> DataFrame:
     own job populates the cache, so the resulting LogicalRDD's origin
     stats are the InMemoryRelation's ACTUAL materialized byte size
     instead of the compounded estimate.  The scratch cache is dropped
-    immediately (the checkpoint has its own storage)."""
-    cached = df.persist()
+    immediately (the checkpoint has its own storage).
+
+    The cache goes on a fresh lazy checkpoint of ``df``, never on
+    ``df`` itself: ``persist`` returns the same Dataset, and once the
+    guard's probe has optimized that Dataset's plan, its stats are
+    fixed without the cache — the reset would copy the compounded
+    estimate straight back (pinned by tests/test_plans.py)."""
+    cached = df.localCheckpoint(eager=False).persist()
     out = cached.localCheckpoint(eager=True)
     cached.unpersist()
     return out
+
+
+def _estimate_sane(df: DataFrame) -> bool:
+    """True when Catalyst's size estimate for ``df`` has not compounded
+    past ``_STATS_BITS_CAP`` bits.  The probe reads private JVM
+    internals; if a PySpark upgrade moves them, report "not sane" so
+    callers degrade to the unconditional reset (correct, just pays the
+    cache build every call) instead of raising everywhere at once."""
+    try:
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return False
+    return size.bit_length() <= _STATS_BITS_CAP
 
 
 def materialize(df: DataFrame) -> DataFrame:
@@ -93,60 +121,69 @@ def materialize(df: DataFrame) -> DataFrame:
     doesn't need it.
     """
     out = df.localCheckpoint(eager=True)
-    try:
-        size = int(_estimated_size_bytes(out))
-    except Exception:
-        # The probe reads private JVM internals; if a PySpark upgrade
-        # moves them, degrade to the unconditional reset (correct, just
-        # pays the cache build every call) instead of raising at every
-        # materialize site at once.
-        return _stats_reset(out)
-    if size.bit_length() <= _STATS_BITS_CAP:
-        return out
-    return _stats_reset(out)
+    return out if _estimate_sane(out) else _stats_reset(out)
 
 
-def _estimated_size_bytes(df: DataFrame) -> int:
-    """Catalyst's sizeInBytes estimate for ``df``'s optimized plan.
+def _cut(df: DataFrame) -> DataFrame:
+    """The per-round lineage cut of :func:`fixpoint`: a LAZY
+    ``localCheckpoint`` that the loop's next check materializes in-job,
+    with :func:`materialize`'s estimate guard probed on the optimized
+    plan (which needs no materialization).  Only a compounded estimate
+    pays the eager persist-backed reset."""
+    return df.localCheckpoint(eager=False) if _estimate_sane(df) else _stats_reset(df)
 
-    Reads private JVM internals (``_jdf.queryExecution()...``) — callers
-    must treat any exception as "estimate unavailable" and fall back.
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    measure: Callable[[DataFrame], Any],
+    *,
+    max_rounds: int | None,
+    check_every: int = 1,
+    until: str = "zero",
+    name: str = "fixpoint",
+    strict: bool = True,
+) -> tuple[DataFrame, int, bool]:
+    """Run ``state = step(state)`` to a fixpoint; returns
+    ``(state, rounds, converged)``.
+
+    - **Lineage cut** after every round (:func:`_cut`): lazy, so rounds
+      between checks chain into the next check's single job, and the
+      size-estimate guard keeps joins against the loop's own aggregates
+      from compounding Catalyst's estimate.
+    - **Check cadence**: ``measure(state)`` — one action, the loop's
+      own count or aggregate — runs after round 1, after every
+      ``check_every``-th round, and after the last budgeted round.
+      Rounds in between cost no job; monotone loops only ever pay
+      ``<= check_every - 1`` no-op rounds for the batching.
+    - **Stop test**: a measure of ``0`` always stops (no row changed,
+      or nothing is left to peel).  ``until="zero"`` stops on nothing
+      else — the measure counts rows the LAST round changed, and a
+      repeat of a non-zero count is still progress.
+      ``until="stable"`` also stops when the measure equals the
+      previous check's — for measures of the state itself (a size, a
+      fingerprint) that only move while the loop does.
+    - **Round budget**: ``max_rounds`` (None = unbounded).  Running out
+      raises one error for every loop, ``"<name> did not converge in N
+      rounds"``; with ``strict=False`` it returns ``converged=False``
+      instead, for callers that recover (escalate to another
+      algorithm, fold more work per round).
+
+    The returned state is always the one the last check measured, so
+    its checkpoint is already materialized.
     """
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-
-
-def materialize_lazy(df: DataFrame) -> DataFrame:
-    """Lineage cut WITHOUT the eager job: a lazy ``localCheckpoint``
-    that the caller's next action materializes in-job, with the same
-    estimate-compounding guard as :func:`materialize` (probed on the
-    optimized plan, which needs no materialization).
-
-    r13 optimization: loop bodies that interleave many eager
-    ``materialize`` calls with batched convergence counts pay one job
-    launch + driver gap PER call while the counted action would have
-    materialized the same chain anyway — graph_scc ran ~120 jobs of
-    which ~115 were under 0.25 s, with more wall in inter-job driver
-    latency than in compute.  Use this where the frame's first consumer
-    is (or leads into) an action that runs anyway; keep eager
-    :func:`materialize` where a job NOW is the point (pinning a memo,
-    isolating a phase for measurement)."""
-    try:
-        size = int(_estimated_size_bytes(df))
-    except Exception:
-        return _stats_reset(df)
-    if size.bit_length() <= _STATS_BITS_CAP:
-        return df.localCheckpoint(eager=False)
-    return _stats_reset(df)
-
-
-def materialize_counted(df: DataFrame) -> tuple[DataFrame, int]:
-    """:func:`materialize` plus the row count every peel/fixpoint loop
-    needs for its convergence test — counted through a persisted frame
-    so the checkpoint captures real stats AND the count is a cache
-    read, not a recompute.  Always persist-backed: loop callers are
-    exactly the compounding sites, and they need the count anyway."""
-    cached = df.persist()
-    out = cached.localCheckpoint(eager=True)
-    n = cached.count()
-    cached.unpersist()
-    return out, n
+    if until not in ("zero", "stable"):
+        raise ValueError(f"unknown stop test {until!r} (expected 'zero' or 'stable')")
+    prev = None
+    rounds = 0
+    while max_rounds is None or rounds < max_rounds:
+        state = _cut(step(state))
+        rounds += 1
+        if rounds == 1 or rounds % check_every == 0 or rounds == max_rounds:
+            m = measure(state)
+            if m == 0 or (until == "stable" and m == prev):
+                return state, rounds, True
+            prev = m
+    if strict:
+        raise RuntimeError(f"{name} did not converge in {max_rounds} rounds")
+    return state, rounds, False

@@ -444,21 +444,137 @@ def test_materialize_resets_size_estimate(spark):
     estimate's bit-length exponentially.  The estimate is a BigInteger —
     in the k-truss peel it reached millions of digits by round ~17 and
     the driver stalled 20-130 s/round inside BigInteger.multiply during
-    stats propagation.  Five self-join rounds: the old behavior reaches
-    ~10^40+; the persist-backed materialize stays at the actual few-KB
-    size."""
-    from bigdata_hits_spark.plans.iterate import materialize, materialize_counted
+    stats propagation.  Five self-join rounds (on a non-unique key, so
+    the estimate really multiplies — a join against a per-key aggregate
+    is estimated at the left side's size): the estimate's bit-length
+    doubles per round to ~10^160; the persist-backed materialize stays
+    at the actual few-KB size.  The fixpoint harness's lazy per-round
+    cut carries the same guard: five compounding rounds batched between
+    two checks."""
+    from bigdata_hits_spark.plans.iterate import fixpoint, materialize
 
-    df = materialize(
-        spark.range(100).select(F.col("id").alias("a"), (F.col("id") + 1).alias("b"))
+    def self_join(df):
+        pairs = df.join(df.select("a", F.col("b").alias("b2")), "a")
+        return df.join(pairs.select("a", "b").distinct(), ["a", "b"])
+
+    start = materialize(
+        spark.range(100).select((F.col("id") % 10).alias("a"), F.col("id").alias("b"))
     )
+    df = start
     for _ in range(5):
-        agg = df.groupBy("a").agg(F.count(F.lit(1)).alias("c"))
-        df = materialize(df.join(agg, "a", "left").select("a", "b"))
+        df = materialize(self_join(df))
     size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     assert size < 10**9, f"size estimate compounding through materialize: {size}"
 
-    ck, n = materialize_counted(df)
+    counts = []
+
+    def count(d):
+        counts.append(d.count())
+        return counts[-1]
+
+    ck, rounds, converged = fixpoint(
+        start, self_join, count, max_rounds=5, check_every=5, until="stable"
+    )
+    assert (rounds, converged) == (5, True)
+    n = counts[-1]
     assert n == 100
     size = int(ck._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    assert size < 10**9
+    assert size < 10**9, f"size estimate compounding through the fixpoint cut: {size}"
+
+
+def _chain(spark, n):
+    """(id, done, changed) over ids 0..n-1 with only id 0 done."""
+    return spark.range(n).select(
+        "id", (F.col("id") == 0).alias("done"), F.lit(False).alias("changed")
+    )
+
+
+def _spread_two(state):
+    """One round: every id one or two past a done id becomes done, so a
+    round marks (at most) two new ids — a changed-count that REPEATS
+    round after round while the loop still makes progress."""
+    s = state.select("id", "done")
+    done = s.filter("done")
+    hit = (
+        done.select((F.col("id") + 1).alias("id"))
+        .union(done.select((F.col("id") + 2).alias("id")))
+        .distinct()
+        .withColumn("hit", F.lit(True))
+    )
+    h = F.coalesce(F.col("hit"), F.lit(False))
+    return s.join(hit, "id", "left").select(
+        "id", (F.col("done") | h).alias("done"), (~F.col("done") & h).alias("changed")
+    )
+
+
+def _n_changed(state):
+    return state.filter("changed").count()
+
+
+def _n_done(state):
+    return state.filter("done").count()
+
+
+def test_fixpoint_zero_stop_ignores_repeated_changed_count(spark):
+    """until="zero" stops only when a check sees no changed row: the
+    changed-count reads 2 at every check of a 9-id chain (rounds 1, 2,
+    4 with check_every=2) and must not stop the loop; round 6 is the
+    first check after the chain is exhausted.  Read as a stable measure,
+    the same repeated 2 would stop it at round 2 with ids undone."""
+    from bigdata_hits_spark.plans.iterate import fixpoint
+
+    seen = []
+
+    def changed(d):
+        seen.append(_n_changed(d))
+        return seen[-1]
+
+    out, rounds, converged = fixpoint(
+        _chain(spark, 9), _spread_two, changed, max_rounds=20, check_every=2
+    )
+    assert (rounds, converged) == (6, True)
+    assert seen == [2, 2, 2, 0]
+    assert _n_done(out) == 9
+
+    early, rounds, _ = fixpoint(
+        _chain(spark, 9), _spread_two, _n_changed, max_rounds=20, check_every=2,
+        until="stable",
+    )
+    assert rounds == 2 and _n_done(early) == 5
+
+
+def test_fixpoint_stable_stops_on_unchanged_measure(spark):
+    """until="stable" stops at the first check whose measure equals the
+    previous check's: done-counts 3, 5, 7, 9, 9 stop at round 5."""
+    from bigdata_hits_spark.plans.iterate import fixpoint
+
+    out, rounds, converged = fixpoint(
+        _chain(spark, 9), _spread_two, _n_done, max_rounds=20, until="stable"
+    )
+    assert (rounds, converged) == (5, True)
+    assert _n_done(out) == 9
+
+
+def test_fixpoint_budget_error_message(spark):
+    """Running out of rounds raises one message for every loop."""
+    import pytest
+
+    from bigdata_hits_spark.plans.iterate import fixpoint
+
+    with pytest.raises(RuntimeError, match=r"^spread did not converge in 2 rounds$"):
+        fixpoint(_chain(spark, 9), _spread_two, _n_changed, max_rounds=2, name="spread")
+    with pytest.raises(ValueError, match="stop test"):
+        fixpoint(_chain(spark, 9), _spread_two, _n_changed, max_rounds=2, until="never")
+
+
+def test_fixpoint_returns_non_convergence(spark):
+    """strict=False hands non-convergence back to the caller with the
+    state the last budgeted round reached (checked, so materialized)."""
+    from bigdata_hits_spark.plans.iterate import fixpoint
+
+    out, rounds, converged = fixpoint(
+        _chain(spark, 9), _spread_two, _n_changed, max_rounds=2, check_every=5,
+        strict=False,
+    )
+    assert (rounds, converged) == (2, False)
+    assert _n_done(out) == 5

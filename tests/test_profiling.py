@@ -392,3 +392,26 @@ def test_robust_outlier_report_known_values(spark):
     # MAD = 0 (interpolated median of [0,0,0,4] = 0): convention 0 outliers
     z = rows["z"]
     assert z["mad"] == 0.0 and z["n_outliers"] == 0
+
+
+def test_pca_constant_vectors_zero_variance(spark):
+    """Constant vectors have an all-zero covariance: the power iteration
+    has no direction to normalize, so it stops at the start vector with
+    eigenvalue 0 instead of dividing by a zero norm."""
+    from bigdata_hits_spark.operators.profiling import (
+        _power_iterate_local,
+        pca_components,
+        pca_top_component,
+    )
+
+    df = spark.createDataFrame([([1.0, 2.0, 3.0],)] * 20, "embedding array<double>")
+    start = round(1 / 3 ** 0.5, 6)
+    top = sorted(map(tuple, pca_top_component(df, iters=8).collect()))
+    assert top == [(0, start), (1, start), (2, start)]
+    both = pca_components(df, r=2, iters=8).collect()
+    assert sorted((r["component"], r["dim"]) for r in both) == [
+        (c, d) for c in range(2) for d in range(3)
+    ]
+    assert all(r["loading"] == start for r in both)
+    assert _power_iterate_local([[0.0] * 3] * 3, 5) == ([start] * 3, 0.0)
+    assert _power_iterate_local([], 5) == ([], 0.0)
