@@ -293,7 +293,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     sym: DataFrame | None = None,
-    encode: bool | str = "auto",
 ) -> DataFrame:
     """(id, community) after ``k`` synchronous label-propagation rounds
     over the undirected graph; labels start as the node ids.
@@ -309,25 +308,24 @@ def label_propagation(
     truncated every ``_LP_CHECKPOINT_EVERY`` rounds to bound plan depth
     for large ``k``.
 
-    ``encode``: run the loop on ORDER-PRESERVING long ids.  The per-round
-    edge-sized shuffles carry (id, community) — 8-byte longs beat
-    variable-length strings there, the same effect that took triangles
-    10.9s -> 3.6s.  xxhash64 is NOT semantics-safe for LP (hashing
-    permutes label order, so frequency ties resolve differently); instead
-    the node ids are ranked once (``global_rank`` over the node dim —
-    node-sized) and the loop runs on the bijection, whose min-of-mode
-    picks exactly the rank of the string-min label; results are
-    identical by construction (equality asserted in tests).  ``"auto"``
-    (default) encodes when ``k >= _LP_ENCODE_MIN_K`` — below that the
-    one-time encode joins outweigh the per-round savings (measurements
-    above)."""
+    From ``k >= _LP_ENCODE_MIN_K`` rounds on, the loop runs on
+    ORDER-PRESERVING long ids.  The per-round edge-sized shuffles carry
+    (id, community) — 8-byte longs beat variable-length strings there,
+    the same effect that took triangles 10.9s -> 3.6s.  xxhash64 is NOT
+    semantics-safe for LP (hashing permutes label order, so frequency
+    ties resolve differently); instead the node ids are ranked once
+    (``global_rank`` over the node dim — node-sized) and the loop runs
+    on the bijection, whose min-of-mode picks exactly the rank of the
+    string-min label; results are identical by construction (equality
+    asserted in tests).  Below the threshold the one-time encode joins
+    outweigh the per-round savings (measurements above)."""
     # Pre-partition the (large) symmetric edge set on the join key ONCE;
     # localCheckpoint pins the partitioning, so each round's equi-join
     # exchanges only the (node-sized) label vector — the same
     # edges-never-move discipline as the ranking loop.
     if sym is None:
         sym = materialize(symmetric_edges(edges, src, dst).repartition("b"))
-    use_encode = encode is True or (encode == "auto" and k >= _LP_ENCODE_MIN_K)
+    use_encode = k >= _LP_ENCODE_MIN_K
     if use_encode:
         from bigdata_hits_spark.operators.ranks import global_rank
 

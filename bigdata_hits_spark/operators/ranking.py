@@ -1,10 +1,19 @@
-"""HITS and SALSA families as parameterized DataFrame power iterations.
+"""HITS, SALSA and PageRank families as parameterized DataFrame power
+iterations.
 
 One harness replaces the reference's 12 copy-pasted scripts
 (``/root/reference/src/*_hits.py``, ``*_salsa.py``; SURVEY §2.2).  Every
 update is a join + grouped sum declared via the DataFrame API, so Catalyst
 plans it (hash aggregate with map-side partials, AQE-picked join strategy,
 skew splitting) instead of the reference's fixed RDD shuffle joins.
+
+Two loops cover the whole family: :func:`_power_iterate` for the mutual
+hub/authority update (HITS, SALSA) and :func:`_teleport_iterate` for the
+single-vector walk (PageRank is personalized PageRank whose seed set is
+every node).  Both end each iteration in the one normalization,
+:func:`~bigdata_hits_spark.plans.iterate.normalized`, and both run the
+broadcast or the shuffle power step chosen once from the node count
+(:func:`_nodes_and_mode`).
 
 Parity semantics faithfully reproduced (SURVEY §2.4):
 
@@ -61,6 +70,26 @@ def _sorted(scores: DataFrame) -> DataFrame:
 SCORE_BROADCAST_MAX_NODES = 5_000_000
 
 
+def _nodes_and_mode(graph: Graph) -> tuple[int, str]:
+    """Node count (memoized per graph) and the power-step mode it
+    selects — the one broadcast-vs-shuffle decision: broadcast the score
+    vector while it fits, shuffle it beyond SCORE_BROADCAST_MAX_NODES."""
+    n = graph.memo(("n_nodes",), graph.nodes.count)
+    return n, "broadcast" if n <= SCORE_BROADCAST_MAX_NODES else "shuffle"
+
+
+def _step_partition_col(mode: str) -> str:
+    """Partitioning column the power step wants: the aggregation key in
+    broadcast mode (grouped sum needs no exchange), the join key in
+    shuffle mode (join exchanges only the score vector)."""
+    return "out" if mode == "broadcast" else "key"
+
+
+def _empty_scores(graph: Graph) -> DataFrame:
+    """The (id, score) result of a ranking over a graph with no nodes."""
+    return graph.nodes.select("id", F.lit(0.0).alias("score"))
+
+
 def _step(edges_prepared: DataFrame, scores: DataFrame, mode: str = "broadcast") -> DataFrame:
     """One propagation: for each out-node, sum mult * score of the joined
     endpoint.  ``edges_prepared`` has columns (key, out, mult).
@@ -84,16 +113,8 @@ def _step(edges_prepared: DataFrame, scores: DataFrame, mode: str = "broadcast")
     same per-iteration movement as the classic Pregel formulation, with
     no broadcast of anything data-sized.
     """
-    if mode == "broadcast":
-        joined = edges_prepared.join(
-            F.broadcast(scores), edges_prepared["key"] == scores["id"], "inner"
-        )
-    elif mode == "shuffle":
-        joined = edges_prepared.join(
-            scores.hint("shuffle_hash"), edges_prepared["key"] == scores["id"], "inner"
-        )
-    else:
-        raise ValueError(f"unknown score-join mode {mode!r}")
+    hinted = F.broadcast(scores) if mode == "broadcast" else scores.hint("shuffle_hash")
+    joined = edges_prepared.join(hinted, edges_prepared["key"] == scores["id"], "inner")
     return (
         joined.select(F.col("out").alias("id"), (F.col("mult") * F.col("score")).alias("contrib"))
         .groupBy("id")
@@ -107,12 +128,12 @@ def _uniform_init(nodes: DataFrame, n: int) -> DataFrame:
 
 
 def _make_damp(
-    mode: str | None,
+    teleport: str | None,
     beta: float,
-    uniform_denom: float | None,
+    uniform_denom: float,
     indicator: DataFrame | None,
     topic_denom: float | None,
-    score_join: str = "broadcast",
+    mode: str,
 ) -> Callable[[DataFrame], DataFrame]:
     """Build the post-update damping transform.
 
@@ -123,18 +144,18 @@ def _make_damp(
       beta*s + (1-beta)/denom for topic nodes
       (``topic_specific_hits.py:75-83``).
     """
-    if mode is None:
+    if teleport is None:
         return lambda df: df
-    if mode == "uniform":
+    if teleport == "uniform":
         add = F.lit((1.0 - beta) / uniform_denom)
         return lambda df: df.select("id", (F.lit(beta) * F.col("score") + add).alias("score"))
-    if mode == "topic":
+    if teleport == "topic":
         add = F.lit((1.0 - beta) / topic_denom)
         # The indicator is node-count-sized and persisted: broadcast it
         # for the same reason as the score vector in _step — except in
         # shuffle mode, where the node vector is by definition beyond
         # broadcast range and the join must exchange instead.
-        ind = F.broadcast(indicator) if score_join == "broadcast" else indicator
+        ind = F.broadcast(indicator) if mode == "broadcast" else indicator
 
         def damp(df: DataFrame) -> DataFrame:
             joined = df.join(ind, "id", "inner")
@@ -144,7 +165,7 @@ def _make_damp(
             return joined.select("id", damped.alias("score"))
 
         return damp
-    raise ValueError(f"unknown teleport mode {mode!r}")
+    raise ValueError(f"unknown teleport mode {teleport!r}")
 
 
 def _within_tol(cur: DataFrame, prev: DataFrame | None, tol: float | None) -> bool:
@@ -171,28 +192,25 @@ def _power_iterate(
     k: int,
     damp: Callable[[DataFrame], DataFrame],
     norm: str,
-    mode: str = "broadcast",
+    mode: str,
     tol: float | None = None,
 ) -> RankResult:
-    """Shared loop: k iterations of (hub step, auth step, damp, normalize)
-    with per-iteration lineage truncation.
+    """Mutual-update loop: k iterations of (hub step, auth step, damp,
+    normalize).
 
     Dataflow per the reference (``base_hits.py:53-64``): the auth step
     reads the just-computed *damped, un-normalized* hubs, and the next
     iteration rebuilds hubs from the *normalized* auths — so the loop
     state is the auth vector ALONE; hubs (normalized or not) are pure
-    output.  Each iteration therefore materializes exactly ONE job —
-    hub step and auth step fused in a single plan ending at the
-    checkpointed, normalized auths — and the final hub vector is derived
-    lazily (one join + agg + normalize) from the second-to-last auth
-    checkpoint when the caller consumes it.
+    output.  Each iteration therefore materializes ONE plan — hub step
+    and auth step fused, ending at the checkpointed, normalized auths —
+    and the final hub vector is normalized once, after the loop.
 
-    Per-iteration materialization is load-bearing twice over: it bounds
-    the logical-plan depth (the in-plan norm is a broadcast-exchanged
-    one-row aggregate; nesting those across iterations re-executes
-    geometrically — measured locally, an un-truncated k=8 run
-    GC-thrashes before finishing), and it keeps each job's stage count
-    constant so wall-clock scales linearly in k.
+    The per-iteration lineage cut inside :func:`normalized` is
+    load-bearing twice over: it bounds the logical-plan depth (an
+    un-truncated k=8 run re-executes geometrically and GC-thrashes
+    before finishing, measured locally), and it keeps each job's stage
+    count constant so wall-clock scales linearly in k.
     """
     if k <= 0:
         return RankResult(hubs=_sorted(init), auths=_sorted(init), iterations=0)
@@ -203,29 +221,13 @@ def _power_iterate(
     # warm k=8 runs are within noise either way), and mutating shared
     # session conf would leak into concurrently submitted queries on a
     # multi-threaded driver.
-    norm_expr = (
-        F.sqrt(F.sum(F.col("score") * F.col("score"))) if norm == "l2" else F.sum("score")
-    ).alias("__norm")
     auths = init
     hubs_raw = init
     prev = None
     done = 0
     for _ in range(k):
         hubs_raw = damp(_step(edges_hub, auths, mode))
-        # LAZY checkpoint + norm agg as the triggering action: the agg
-        # materializes the checkpoint AND returns the scalar in ONE job
-        # (previously an eager checkpoint job followed by a separate agg
-        # job — two launches per iteration).  The floats are identical:
-        # the same hash-agg runs over the same checkpointed partitions.
-        # O(1) driver scalar per iteration (the reference collects the
-        # same — base_hits.py:17); injecting it as a literal keeps the
-        # next iteration's plan free of an extra broadcast barrier.
-        # (Measured: an in-plan broadcast norm nests a BroadcastExchange
-        # inside the score-vector broadcast and runs SLOWER — two
-        # serialized broadcast barriers per iteration.)
-        auths_raw = damp(_step(edges_auth, hubs_raw, mode)).localCheckpoint(eager=False)
-        nrm = auths_raw.agg(norm_expr).first()[0]
-        auths = auths_raw.select("id", (F.col("score") / F.lit(nrm)).alias("score"))
+        auths = normalized(damp(_step(edges_auth, hubs_raw, mode)), norm)
         done += 1
         if _within_tol(auths, prev, tol):
             break
@@ -282,16 +284,9 @@ def _hits_edges(graph: Graph, weight: str | None, mode: str) -> tuple[DataFrame,
 
     def build() -> tuple[DataFrame, DataFrame]:
         eh, ea = _hits_step_relations(graph, weight)
-        return _prepare(graph, "out" if mode == "broadcast" else "key", eh, ea)
+        return _prepare(graph, _step_partition_col(mode), eh, ea)
 
     return graph.memo(("hits_edges", weight, mode), build)
-
-
-def _step_partition_col(mode: str) -> str:
-    """Partitioning column the power step wants: the aggregation key in
-    broadcast mode (grouped sum needs no exchange), the join key in
-    shuffle mode (join exchanges only the score vector)."""
-    return "out" if mode == "broadcast" else "key"
 
 
 def persist_ranking_edges(
@@ -299,12 +294,12 @@ def persist_ranking_edges(
     table_prefix: str,
     *,
     weight: str | None = None,
-    mode: str = "broadcast",
     buckets: int = 32,
 ) -> tuple[str, str]:
     """Persist the HITS step relations as BUCKETED tables (hash-bucketed
-    on the step's partition column) — the persistent-layout twin of the
-    in-session :func:`_prepare` repartition.
+    on the partition column of the power step the node count selects) —
+    the persistent-layout twin of the in-session :func:`_prepare`
+    repartition.
 
     The prepare shuffle is paid ONCE at write time (e.g. nightly,
     alongside graph ingestion); every later session attaches the tables
@@ -316,7 +311,7 @@ def persist_ranking_edges(
     from bigdata_hits_spark.sources.bucketed import write_bucketed
 
     eh, ea = _hits_step_relations(graph, weight)
-    col = _step_partition_col(mode)
+    col = _step_partition_col(_nodes_and_mode(graph)[1])
     hub_t, auth_t = f"{table_prefix}_hub", f"{table_prefix}_auth"
     write_bucketed(eh, hub_t, col, buckets)
     write_bucketed(ea, auth_t, col, buckets)
@@ -328,7 +323,6 @@ def attach_ranking_edges(
     table_prefix: str,
     *,
     weight: str | None = None,
-    mode: str = "broadcast",
 ) -> None:
     """Seed ``graph``'s memo with bucketed step relations previously
     written by :func:`persist_ranking_edges`, so :func:`hits` (and the
@@ -339,10 +333,10 @@ def attach_ranking_edges(
     spark = graph.edges.sparkSession
     eh = read_bucketed(spark, f"{table_prefix}_hub")
     ea = read_bucketed(spark, f"{table_prefix}_auth")
-    graph.memo(("hits_edges", weight, mode), lambda: (eh, ea))
+    graph.memo(("hits_edges", weight, _nodes_and_mode(graph)[1]), lambda: (eh, ea))
 
 
-def _salsa_edges(graph: Graph, mode: str = "broadcast") -> tuple[DataFrame, DataFrame]:
+def _salsa_edges(graph: Graph, mode: str) -> tuple[DataFrame, DataFrame]:
     """(hub-step, auth-step) edge relations for mutual-update SALSA,
     memoized per graph: contributions are divided by the joined endpoint's
     degree (``base_salsa_2.py:14-23,75-80``), i.e. mult = 1/in_deg(dst) on
@@ -370,30 +364,27 @@ def _salsa_edges(graph: Graph, mode: str = "broadcast") -> tuple[DataFrame, Data
                 (F.lit(1.0) / F.col("d.out_degree")).alias("mult"),
             )
         )
-        return _prepare(graph, "out" if mode == "broadcast" else "key", eh, ea)
+        return _prepare(graph, _step_partition_col(mode), eh, ea)
 
     return graph.memo(("salsa_edges", mode), build)
 
 
-def _topic_state(graph: Graph, topic: str) -> tuple[DataFrame, float]:
-    """Memoized (persisted 0/1 indicator, topic node count) per topic."""
+def _topic_state(graph: Graph, topic: str | None) -> tuple[DataFrame, float]:
+    """Memoized (persisted 0/1 indicator, topic node count) per topic —
+    and the one check, shared by every topic-teleport ranking, that the
+    topic names at least one node."""
+    if topic is None:
+        raise ValueError("teleport='topic' requires topic=")
 
     def build():
         ind = graph.topic_indicator(topic).persist()
         n_topic = float(ind.agg(F.sum("topic_specific")).first()[0] or 0)
         return ind, n_topic
 
-    return graph.memo(("topic_state", topic), build)
-
-
-def _resolve_score_join(score_join: str, n_nodes: int) -> str:
-    """'auto' -> broadcast while the node vector fits broadcast range,
-    shuffle beyond it (SCORE_BROADCAST_MAX_NODES)."""
-    if score_join == "auto":
-        return "broadcast" if n_nodes <= SCORE_BROADCAST_MAX_NODES else "shuffle"
-    if score_join in ("broadcast", "shuffle"):
-        return score_join
-    raise ValueError(f"score_join must be auto|broadcast|shuffle, got {score_join!r}")
+    ind, n_topic = graph.memo(("topic_state", topic), build)
+    if n_topic == 0:
+        raise ValueError(f"no nodes labeled {topic!r}")
+    return ind, n_topic
 
 
 def hits(
@@ -404,7 +395,6 @@ def hits(
     teleport: str | None = None,
     beta: float = 0.8,
     topic: str | None = None,
-    score_join: str = "auto",
     tol: float | None = None,
 ) -> RankResult:
     """HITS power iteration (Kleinberg), L2-normalized per iteration.
@@ -416,28 +406,24 @@ def hits(
     - ``weight``: edge-weight column name -> weighted HITS.
     - ``teleport='uniform'``: s -> beta*s + (1-beta)/N after each sum.
     - ``teleport='topic'`` + ``topic=...``: teleport mass only into
-      topic-labeled nodes, denominator N_topic.
-    - ``score_join``: 'auto' (default) broadcasts the score vector while
-      it fits broadcast range and switches to the shuffle-join step
-      beyond SCORE_BROADCAST_MAX_NODES; 'broadcast'/'shuffle' force a
-      mode (see :func:`_step`).
+      topic-labeled nodes, denominator N_topic; a topic no node carries
+      raises ValueError.
     - ``tol``: opt-in early stop once the L-inf delta of successive
       normalized auth vectors falls to ``tol`` (k remains the hard cap).
       The reference is fixed-k; default None preserves parity.
 
+    The score vector is broadcast while the node count fits broadcast
+    range and shuffled beyond SCORE_BROADCAST_MAX_NODES (see
+    :func:`_step`).  A graph with no nodes ranks to empty vectors.
+
     Topic-exclusive / query-dependent variants compose via
     :func:`hits_topic_exclusive` / :func:`hits_query_dependent`.
     """
-    n = graph.memo(("n_nodes",), graph.nodes.count)
-    mode = _resolve_score_join(score_join, n)
-    indicator = None
-    topic_denom = None
-    if teleport == "topic":
-        if topic is None:
-            raise ValueError("teleport='topic' requires topic=")
-        indicator, n_topic = _topic_state(graph, topic)
-        topic_denom = n_topic
-    damp = _make_damp(teleport, beta, float(n), indicator, topic_denom, mode)
+    n, mode = _nodes_and_mode(graph)
+    if n == 0:
+        return RankResult(hubs=_empty_scores(graph), auths=_empty_scores(graph), iterations=0)
+    indicator, n_topic = _topic_state(graph, topic) if teleport == "topic" else (None, None)
+    damp = _make_damp(teleport, beta, float(n), indicator, n_topic, mode)
     eh, ea = _hits_edges(graph, weight, mode)
     return _power_iterate(eh, ea, _uniform_init(graph.nodes, n), k, damp, "l2", mode, tol)
 
@@ -462,7 +448,6 @@ def salsa(
     teleport: str | None = None,
     beta: float = 0.8,
     topic: str | None = None,
-    score_join: str = "auto",
     tol: float | None = None,
 ) -> RankResult:
     """Mutual-update SALSA, L1-normalized per iteration
@@ -472,25 +457,23 @@ def salsa(
     Init is uniform 1/sqrt(N) (sic — mirrors ``base_salsa_2.py:25``) or,
     for the topic variant, 1/(2*N_topic) on topic nodes and 0 elsewhere
     (``topic_specific_salsa.py:23``).  Teleport denominators are 2N
-    (uniform) / 2*N_topic (topic) per SURVEY §2.4(c).
+    (uniform) / 2*N_topic (topic) per SURVEY §2.4(c).  Power-step mode,
+    unknown topics and empty graphs as in :func:`hits`.
     """
-    n = graph.memo(("n_nodes",), graph.nodes.count)
-    mode = _resolve_score_join(score_join, n)
-    indicator = None
-    topic_denom = None
+    n, mode = _nodes_and_mode(graph)
+    if n == 0:
+        return RankResult(hubs=_empty_scores(graph), auths=_empty_scores(graph), iterations=0)
+    indicator = topic_denom = None
+    init = _uniform_init(graph.nodes, n)
     if teleport == "topic":
-        if topic is None:
-            raise ValueError("teleport='topic' requires topic=")
         indicator, n_topic = _topic_state(graph, topic)
         topic_denom = 2.0 * n_topic
         init = indicator.select(
             "id",
             F.when(F.col("topic_specific") == 0, F.lit(0.0))
-            .otherwise(F.lit(1.0 / (2.0 * n_topic)))
+            .otherwise(F.lit(1.0 / topic_denom))
             .alias("score"),
         )
-    else:
-        init = _uniform_init(graph.nodes, n)
     damp = _make_damp(teleport, beta, 2.0 * n, indicator, topic_denom, mode)
     eh, ea = _salsa_edges(graph, mode)
     return _power_iterate(eh, ea, init, k, damp, "l1", mode, tol)
@@ -498,10 +481,12 @@ def salsa(
 
 def _pagerank_prepared(graph: Graph, weight: str | None, mode: str):
     """Memoized column-normalized edge relation (key, out, mult) and the
-    pinned node-id list shared by the PageRank-family loops —
+    pinned node-id list shared by the PageRank family —
     ``M[dst, src] = w(src, dst) / out_w(src)``, prepared once per
     (graph, weight, mode) and reused by every job on the session's
-    graph (the reference's many-jobs-one-graph pattern)."""
+    graph (the reference's many-jobs-one-graph pattern).  A source whose
+    out-weights sum to 0 gets a NULL multiplier, so it contributes
+    nothing (the grouped sum skips NULLs)."""
 
     def build() -> tuple[DataFrame, DataFrame]:
         edges = graph.edges
@@ -513,14 +498,52 @@ def _pagerank_prepared(graph: Graph, weight: str | None, mode: str):
             .select(
                 F.col("e.src").alias("key"),
                 F.col("e.dst").alias("out"),
-                (w / F.col("d.out_w")).alias("mult"),
+                (w / F.nullif(F.col("d.out_w"), F.lit(0.0))).alias("mult"),
             )
         )
-        (ea_prepared,) = _prepare(graph, "out" if mode == "broadcast" else "key", ea)
+        (ea_prepared,) = _prepare(graph, _step_partition_col(mode), ea)
         (ids_prepared,) = _prepare(graph, "id", graph.nodes.select("id"))
         return ea_prepared, ids_prepared
 
     return graph.memo(("pagerank_edges", weight, mode), build)
+
+
+def _teleport_iterate(
+    ea: DataFrame,
+    seeded: DataFrame,
+    n_seeds: float,
+    k: int,
+    beta: float,
+    mode: str,
+    tol: float | None,
+) -> DataFrame:
+    """The PageRank-family loop: ``p <- beta * M^T p + (1 - beta) * e_S``
+    over every row of the pinned per-node teleport relation ``seeded``
+    (id, __s 0/1), with ``e_S`` uniform over its ``n_seeds`` seeds and
+    p0 = e_S, L1-renormalized per iteration (absorbing the dangling
+    leak: sinks' outflow is not redistributed).  Per iteration the
+    propagated contributions (node-vector-sized) are broadcast, or in
+    shuffle mode exchanged onto the relation's ``id`` partitioning —
+    never the edges."""
+    on_seed = F.col("__s") == 1
+    tele = F.when(on_seed, F.lit((1.0 - beta) / n_seeds)).otherwise(F.lit(0.0))
+    scores = seeded.select(
+        "id", F.when(on_seed, F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0)).alias("score")
+    )
+    prev = None
+    for _ in range(k):
+        contrib = _step(ea, scores, mode)
+        contrib = F.broadcast(contrib) if mode == "broadcast" else contrib.hint("shuffle_hash")
+        scores = normalized(
+            seeded.join(contrib, "id", "left").select(
+                "id", (F.lit(beta) * F.coalesce(F.col("score"), F.lit(0.0)) + tele).alias("score")
+            ),
+            "l1",
+        )
+        if _within_tol(scores, prev, tol):
+            break
+        prev = scores
+    return _sorted(scores)
 
 
 def pagerank(
@@ -529,7 +552,6 @@ def pagerank(
     *,
     beta: float = 0.85,
     weight: str | None = None,
-    score_join: str = "auto",
     tol: float | None = None,
 ) -> DataFrame:
     """PageRank over the directed graph — beyond-reference (the
@@ -538,7 +560,8 @@ def pagerank(
 
     ``p <- beta * M^T p + (1 - beta) / N`` over EVERY node, with
     ``M[dst, src] = w(src, dst) / out_w(src)`` (with ``weight``,
-    out-degree is the weighted sum).
+    out-degree is the weighted sum).  It is :func:`personalized_pagerank`
+    with every node a seed, and runs the same loop.
 
     Unlike the HITS/SALSA loops — whose inner-join node dropping is
     reference parity (SURVEY §2.4(a)) — this op is beyond-reference, so
@@ -546,38 +569,15 @@ def pagerank(
     node via a left join of the pinned node list with the propagated
     contributions (on a bipartite/DAG graph the dropped-node form
     collapses to an empty vector in two iterations, which is useless).
-    Scores are L1-renormalized per iteration, absorbing the
-    dangling-node leak (sinks' outflow is not explicitly redistributed).
 
-    Returns ``(id, score)`` sorted score-descending.  Scale behavior
-    matches :func:`hits`: contributions (node-vector-sized) are
-    broadcast below SCORE_BROADCAST_MAX_NODES; beyond it the node list
-    is pre-partitioned on ``id`` — the same partitioning the grouped
-    propagation sum already produces — so the per-iteration movement is
-    the vector-only exchange, never the edges.
+    Returns ``(id, score)`` sorted score-descending; empty for a graph
+    with no nodes.  ``tol`` stops early as in :func:`hits`.
     """
-    n = graph.memo(("n_nodes",), graph.nodes.count)
-    mode = _resolve_score_join(score_join, n)
+    n, mode = _nodes_and_mode(graph)
+    if n == 0:
+        return _empty_scores(graph)
     ea, node_ids = _pagerank_prepared(graph, weight, mode)
-    teleport = F.lit((1.0 - beta) / float(n))
-    scores = graph.nodes.select("id", F.lit(1.0 / float(n)).alias("score"))
-    prev = None
-    for _ in range(k):
-        contrib = _step(ea, scores, mode)
-        contrib = F.broadcast(contrib) if mode == "broadcast" else contrib.hint("shuffle_hash")
-        # Lazy checkpoint; the norm agg below is the triggering action —
-        # checkpoint materialization and scalar in ONE job (same fusion
-        # as _power_iterate).
-        scores_raw = node_ids.join(contrib, "id", "left").select(
-            "id",
-            (F.lit(beta) * F.coalesce(F.col("score"), F.lit(0.0)) + teleport).alias("score"),
-        ).localCheckpoint(eager=False)
-        nrm = scores_raw.agg(F.sum("score").alias("__norm")).first()[0]
-        scores = scores_raw.select("id", (F.col("score") / F.lit(nrm)).alias("score"))
-        if _within_tol(scores, prev, tol):
-            break
-        prev = scores
-    return _sorted(scores)
+    return _teleport_iterate(ea, node_ids.withColumn("__s", F.lit(1)), float(n), k, beta, mode, tol)
 
 
 def personalized_pagerank(
@@ -587,71 +587,32 @@ def personalized_pagerank(
     *,
     beta: float = 0.85,
     weight: str | None = None,
-    score_join: str = "auto",
 ) -> DataFrame:
     """Personalized PageRank: the power iteration of :func:`pagerank`
     with the teleport mass restricted to the SEED set (nodes whose
-    ``labels`` equal ``topic``) — ``p <- beta * M^T p +
-    (1 - beta) * e_S`` with ``e_S`` uniform over seeds, p0 = e_S.  The
-    canonical graph-proximity score ("what is close to THIS set"):
-    recommendation from a user's purchases, topical authority from a
-    trusted seed list, expansion sets for curation.
+    label equals ``topic``; none raises ValueError) — ``p <- beta *
+    M^T p + (1 - beta) * e_S`` with ``e_S`` uniform over seeds,
+    p0 = e_S.  The canonical graph-proximity score ("what is close to
+    THIS set"): recommendation from a user's purchases, topical
+    authority from a trusted seed list, expansion sets for curation.
 
-    Same machinery and scale behavior as PageRank: the
-    column-normalized edge relation is the shared memo (edges never
-    move per iteration), the seed indicator and teleport column live in
-    one pinned node-sized relation, every iteration is one vector-only
-    exchange plus the fused checkpoint+norm job, and L1 renormalization
-    absorbs the dangling leak.  Seed count is the one extra bounded
-    scalar."""
-    n = graph.memo(("n_nodes",), graph.nodes.count)
-    mode = _resolve_score_join(score_join, n)
+    Same loop and scale behavior as PageRank; the seed indicator is
+    pinned once per (topic, weight, mode) on the node list's
+    partitioning, and the seed count is the one extra bounded scalar."""
+    _n, mode = _nodes_and_mode(graph)
+    indicator, n_seeds = _topic_state(graph, topic)
     ea, node_ids = _pagerank_prepared(graph, weight, mode)
-
-    def build_seeded() -> tuple[DataFrame, int]:
-        seeds = graph.nodes.filter(F.col("labels") == topic).select("id")
-        ns = seeds.count()
-        if ns == 0:
-            raise ValueError(f"personalized_pagerank: no nodes labeled {topic!r}")
-        tvec = materialize(
-            node_ids.join(seeds.withColumn("__s", F.lit(1)), "id", "left").select(
-                "id", F.coalesce(F.col("__s"), F.lit(0)).alias("__s")
-            )
-        )
-        return tvec, ns
-
-    # Memo key includes (weight, mode) like ("pagerank_edges", ...): tvec
-    # is content-identical across modes, but its pinned partitioning was
-    # chosen against node_ids prepared under the CURRENT (weight, mode) —
-    # reusing it under another mode would silently break the
-    # edges-never-move co-partitioning assumption.
-    tvec, ns = graph.memo(("ppr_seeds", topic, weight, mode), build_seeded)
-    tele = (1.0 - beta) / float(ns)
-    scores = tvec.select(
-        "id",
-        F.when(F.col("__s") == 1, F.lit(1.0 / float(ns))).otherwise(F.lit(0.0)).alias(
-            "score"
+    # Memo key includes (weight, mode) like ("pagerank_edges", ...): the
+    # relation is content-identical across them, but its pinned
+    # partitioning was chosen against node_ids prepared under the CURRENT
+    # (weight, mode).
+    seeded = graph.memo(
+        ("ppr_seeds", topic, weight, mode),
+        lambda: materialize(
+            node_ids.join(indicator.withColumnRenamed("topic_specific", "__s"), "id", "left")
         ),
     )
-    for _ in range(k):
-        contrib = _step(ea, scores, mode)
-        contrib = (
-            F.broadcast(contrib) if mode == "broadcast" else contrib.hint("shuffle_hash")
-        )
-        scores_raw = (
-            tvec.join(contrib, "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit(beta) * F.coalesce(F.col("score"), F.lit(0.0))
-                    + F.when(F.col("__s") == 1, F.lit(tele)).otherwise(F.lit(0.0))
-                ).alias("score"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        nrm = scores_raw.agg(F.sum("score").alias("__norm")).first()[0]
-        scores = scores_raw.select("id", (F.col("score") / F.lit(nrm)).alias("score"))
-    return _sorted(scores)
+    return _teleport_iterate(ea, seeded, n_seeds, k, beta, mode, None)
 
 
 def salsa_simplified(graph: Graph, *, weight: str | None = None) -> RankResult:

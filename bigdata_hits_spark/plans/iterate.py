@@ -1,12 +1,13 @@
-"""Iteration harness: in-plan normalization, lineage truncation, and the
-one fixpoint driver every convergence loop runs on.
+"""Iteration harness: the one score normalization, lineage truncation,
+and the one fixpoint driver every convergence loop runs on.
 
 The reference's power loops collect the norm scalar to the driver twice per
 iteration and never cache, so every action recomputes a lineage that grows
 with the iteration count and re-reads the input CSVs (the reference's
-``base_hits.py``; SURVEY §3.1, §4.2).  Here the norm stays *in the plan*
-(:func:`normalized`) and lineage is truncated with ``localCheckpoint``,
-which also bounds the logical-plan blowup across iterations (SURVEY §4.3).
+``base_hits.py``; SURVEY §3.1, §4.2).  Here every ranking vector is
+normalized by :func:`normalized`, which cuts its lineage with a lazy
+``localCheckpoint`` and pays checkpoint and norm scalar in ONE job, so a
+loop's plan never grows across iterations (SURVEY §4.3).
 
 Convergence loops (connected components, star contraction, the three SCC
 fixpoints, k-core, k-truss) are supersteps in the Pregelix sense: one
@@ -14,8 +15,9 @@ join+group-by round body, repeated until nothing moves.  They differ only
 in that body and in what they count, so :func:`fixpoint` owns everything
 else — the per-round lineage cut, the check cadence, the stop test and
 the round budget — and the operators pass a step and a measure.
-Fixed-k loops (HITS/SALSA/PageRank, label propagation, BFS, feature
-propagation) have no convergence test and keep their own cadence.
+Fixed-k loops (HITS/SALSA and the PageRank family, label propagation,
+BFS, feature propagation) have no convergence test and keep their own
+cadence; the ranking ones end every iteration in :func:`normalized`.
 """
 
 from __future__ import annotations
@@ -25,27 +27,31 @@ from typing import Any, Callable
 from pyspark.sql import Column, DataFrame, functions as F
 
 
-def normalized(scores: DataFrame, how: str = "l2", score_col: str = "score") -> DataFrame:
-    """Divide ``score_col`` by the vector's L2 or L1 norm, distributedly.
+def normalized(scores: DataFrame, how: str = "l2") -> DataFrame:
+    """Divide the ``score`` column by the vector's L2 or L1 norm: the one
+    normalization of every ranking vector.
 
     L2 mirrors HITS (``base_hits.py:16-19``), L1 mirrors SALSA
-    (``base_salsa.py:13-15``).  Implemented as a broadcast cross join of a
-    one-row aggregate: no ``collect`` on the driver, works at any vector
-    size.
+    (``base_salsa.py:13-15``).  The vector is cut with a LAZY
+    ``localCheckpoint`` and the norm aggregate is the action that
+    materializes it, so checkpoint and scalar cost one job.  The scalar
+    (O(1) on the driver; the reference collects the same) is divided in
+    as a literal, which keeps the next iteration's plan free of a second
+    broadcast barrier — an in-plan broadcast norm nests a
+    BroadcastExchange inside the score-vector broadcast and measured
+    slower.  A zero or null norm (an all-zero or empty vector) leaves the
+    vector unchanged.
     """
-    s = F.col(score_col)
+    s = F.col("score")
     if how == "l2":
         norm: Column = F.sqrt(F.sum(s * s))
     elif how == "l1":
         norm = F.sum(s)
     else:
         raise ValueError(f"unknown norm {how!r} (expected 'l1' or 'l2')")
-    norm_df = scores.agg(norm.alias("__norm"))
-    out_cols = [c for c in scores.columns if c != score_col]
-    return (
-        scores.crossJoin(F.broadcast(norm_df))
-        .select(*out_cols, (s / F.col("__norm")).alias(score_col))
-    )
+    cut = scores.localCheckpoint(eager=False)
+    nrm = cut.agg(norm).first()[0]
+    return cut.withColumn("score", s / F.lit(nrm)) if nrm else cut
 
 
 #: Size-estimate bit-length above which :func:`materialize` resets the

@@ -1440,7 +1440,7 @@ def _lp_k6_sql() -> str:
 
 @register("graph_label_propagation_k6", _lp_k6_sql())
 def q_graph_label_propagation_k6(spark, sf_dir):
-    """Label propagation at k=6 — above the encode='auto' threshold, so
+    """Label propagation at k=6 — above the rank-encoding threshold, so
     this declared row runs the RANK-ENCODED long-id loop
     (operators/graphalgs.py, round-5 A/B promotion) and proves it exact
     against the same unrolled window-mode CTE oracle family as the k=3

@@ -6,6 +6,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from bigdata_hits_spark.operators import graphalgs
 from bigdata_hits_spark.operators.graphalgs import label_propagation, triangle_counts
 
 
@@ -145,19 +146,24 @@ def test_label_propagation_deterministic_across_repartition(spark):
     assert a == b and len(a) > 0
 
 
-def test_label_propagation_encoded_matches_string_path(spark):
-    """The rank-encoded loop (encode=True) must be bit-identical to the
-    string-id loop — including on FREQUENCY TIES, where the min-label
-    tiebreak is exactly what a non-order-preserving encoding (xxhash64)
-    would scramble.  A random graph plus star centers gives plenty of
+def test_label_propagation_encoded_matches_string_path(spark, monkeypatch):
+    """The rank-encoded loop (forced by a 0 threshold) must be
+    bit-identical to the string-id loop (forced by a threshold above k)
+    — including on FREQUENCY TIES, where the min-label tiebreak is
+    exactly what a non-order-preserving encoding (xxhash64) would
+    scramble.  A random graph plus star centers gives plenty of
     equal-frequency neighbor label sets in early rounds."""
     rng = random.Random(23)
     pairs = list({(f"n{rng.randrange(40)}", f"n{rng.randrange(40)}") for _ in range(90)})
     stars = [(f"hub{j}", f"n{i}") for j in range(3) for i in range(0, 40, 7)]
     df = spark.createDataFrame(pairs + stars, "src string, dst string")
+
+    def run(k, min_k):
+        monkeypatch.setattr(graphalgs, "_LP_ENCODE_MIN_K", min_k)
+        return {(r["id"], r["community"]) for r in label_propagation(df, k=k).collect()}
+
     for k in (1, 3, 6):
-        s = {(r["id"], r["community"]) for r in label_propagation(df, k=k, encode=False).collect()}
-        e = {(r["id"], r["community"]) for r in label_propagation(df, k=k, encode=True).collect()}
+        s, e = run(k, k + 1), run(k, 0)
         assert s == e and len(s) > 0, k
 
 

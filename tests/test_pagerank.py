@@ -4,8 +4,9 @@ dropped-node semantics, mode equivalence (broadcast vs shuffle)."""
 import numpy as np
 import pytest
 
+from bigdata_hits_spark.operators import ranking
 from bigdata_hits_spark.operators.graph import Graph
-from bigdata_hits_spark.operators.ranking import pagerank
+from bigdata_hits_spark.operators.ranking import hits, pagerank, personalized_pagerank, salsa
 
 NODES = ["a", "b", "c", "d"]
 EDGES = [
@@ -50,12 +51,18 @@ def test_pagerank_matches_numpy(g, weighted):
         assert got[n] == pytest.approx(want[n], rel=1e-9)
 
 
-def test_pagerank_modes_agree(g):
-    b = {r["id"]: r["score"] for r in pagerank(g, k=3, score_join="broadcast").collect()}
-    s = {r["id"]: r["score"] for r in pagerank(g, k=3, score_join="shuffle").collect()}
-    assert set(b) == set(s)
-    for n in b:
-        assert b[n] == pytest.approx(s[n], rel=1e-12)
+def test_pagerank_modes_agree(g, monkeypatch):
+    """PageRank and personalized PageRank compute identical scores on the
+    broadcast and the shuffle power step (lowering the threshold to 0
+    sends the micrograph down the shuffle path)."""
+    runs = [lambda: pagerank(g, k=3), lambda: personalized_pagerank(g, "l", k=3)]
+    broadcast = [{r["id"]: r["score"] for r in run().collect()} for run in runs]
+    monkeypatch.setattr(ranking, "SCORE_BROADCAST_MAX_NODES", 0)
+    for run, b in zip(runs, broadcast):
+        s = {r["id"]: r["score"] for r in run().collect()}
+        assert set(b) == set(s)
+        for n in b:
+            assert b[n] == pytest.approx(s[n], rel=1e-12)
 
 
 def test_pagerank_early_stop(g):
@@ -94,13 +101,19 @@ def test_personalized_pagerank_mass_and_seed_bias(spark):
     assert min(out["0"], out["1"]) > out["4"]
 
 
-def test_personalized_pagerank_unknown_topic_raises(spark):
-    import pytest
-
-    from bigdata_hits_spark.operators.graph import Graph
-    from bigdata_hits_spark.operators.ranking import personalized_pagerank
-
+@pytest.mark.parametrize(
+    "run",
+    [
+        lambda g: personalized_pagerank(g, "nope", k=2),
+        lambda g: hits(g, k=2, teleport="topic", topic="nope"),
+        lambda g: salsa(g, k=2, teleport="topic", topic="nope"),
+    ],
+    ids=["personalized_pagerank", "hits", "salsa"],
+)
+def test_personalized_pagerank_unknown_topic_raises(spark, run):
+    """Every topic-teleport ranking raises the same error for a topic no
+    node carries."""
     edges = spark.createDataFrame([("a", "b")], "src string, dst string")
     nodes = spark.createDataFrame([("a", "x"), ("b", "x")], "id string, labels string")
-    with pytest.raises(ValueError):
-        personalized_pagerank(Graph(nodes=nodes, edges=edges), "nope", k=2)
+    with pytest.raises(ValueError, match="no nodes labeled 'nope'"):
+        run(Graph(nodes=nodes, edges=edges))

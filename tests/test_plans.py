@@ -282,11 +282,10 @@ def test_time_partitioned_scan_prunes(spark, sf_dir_oracle, tmp_path):
 #:
 #: Categories:
 #: - one-row scalar attach (crossJoin(broadcast(<1-row aggregate>)) —
-#:   plans/iterate.py normalized, ranks.py ntile_exact, profiling bounds,
-#:   bm25/tfidf n_docs, skew_report total): a BNLJ whose build side is
-#:   one row is a constant-fold, not a scale risk.  The ranking families
-#:   carry one per score-normalization (salsa normalizes hub AND auth
-#:   sides -> 2).
+#:   ranks.py ntile_exact, profiling bounds, bm25/tfidf n_docs,
+#:   skew_report total): a BNLJ whose build side is one row is a
+#:   constant-fold, not a scale risk.  The ranking families carry none:
+#:   plans/iterate.py normalized divides by a driver-side literal.
 #: - fixed tiny probe set (ann_cosine_topk's 5 pinned query vectors
 #:   against the corpus — the exact-baseline design, fan-out 5n).
 #: - embedding_neardup_pairs: the DELIBERATE all-pairs exact baseline
@@ -309,19 +308,6 @@ _BNLJ_ALLOWED = {
     "orders_price_equidepth": 3,
     "events_decayed_engagement": 1,  # as-of max-timestamp one-row attach
     "orders_price_qnorm": 1,  # n one-row attach for (rank-1)/(n-1)
-    # per-iteration norm attach in the ranking families
-    "base_hits_k3": 1,
-    "weighted_hits_k3": 1,
-    "teleport_hits_k3": 1,
-    "topic_specific_hits_k3": 1,
-    "topic_exclusive_hits_k3": 1,
-    "query_dependent_hits_k3": 1,
-    "salsa_mutual_k3": 1,
-    "teleport_salsa_k3": 1,
-    "topic_specific_salsa_k3": 1,
-    "base_salsa": 2,
-    "weighted_salsa": 2,
-    "query_dependent_salsa": 2,
     # fixed tiny probe set / deliberate exact baseline
     "ann_cosine_topk": 1,
     # the distributed MMR arm embeds the same deliberate exact-cosine
@@ -578,3 +564,80 @@ def test_fixpoint_returns_non_convergence(spark):
     )
     assert (rounds, converged) == (2, False)
     assert _n_done(out) == 5
+
+
+#: Jobs per power iteration on the 300-node / 2,000-edge graph below,
+#: recorded when the PageRank and personalized-PageRank loops were
+#: merged: a ranking loop may get cheaper per iteration, never dearer.
+_RANKING_JOBS_PER_ITER = {
+    "broadcast": {
+        "hits": 4, "hits_topic": 6, "salsa": 4, "pagerank": 4, "personalized_pagerank": 4,
+    },
+    "shuffle": {
+        "hits": 7, "hits_topic": 9, "salsa": 7, "pagerank": 6, "personalized_pagerank": 6,
+    },
+}
+
+
+def test_ranking_jobs_per_iteration(spark, monkeypatch):
+    """(jobs at k=6 - jobs at k=3) / 3 on a warm graph, with every
+    output collected, in both power-step modes: no ranking loop pays
+    more jobs per iteration than its record, and PageRank and
+    personalized PageRank — one loop — pay the same."""
+    import random
+    import uuid
+
+    from bigdata_hits_spark.operators import ranking
+    from bigdata_hits_spark.operators.graph import Graph
+
+    rng = random.Random(7)
+    ids = [f"v{i}" for i in range(300)]
+    pairs = set()
+    while len(pairs) < 2000:
+        pairs.add((rng.choice(ids), rng.choice(ids)))
+    nodes = spark.createDataFrame(
+        [(v, f"t{i % 3}") for i, v in enumerate(ids)], "id string, labels string"
+    )
+    edges = spark.createDataFrame(
+        [(s, d, rng.random()) for s, d in sorted(pairs)], "src string, dst string, w double"
+    )
+    runs = {
+        "hits": lambda g, k: ranking.hits(g, k),
+        "hits_topic": lambda g, k: ranking.hits(g, k, teleport="topic", topic="t0"),
+        "salsa": lambda g, k: ranking.salsa(g, k),
+        "pagerank": lambda g, k: ranking.pagerank(g, k),
+        "personalized_pagerank": lambda g, k: ranking.personalized_pagerank(g, "t0", k),
+    }
+    sc = spark.sparkContext
+
+    def jobs(run, g, k):
+        group = f"ranking-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = run(g, k)
+            for df in (out.hubs, out.auths) if isinstance(out, ranking.RankResult) else (out,):
+                df.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the status store is fed asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    failures = []
+    for mode, ceilings in _RANKING_JOBS_PER_ITER.items():
+        if mode == "shuffle":
+            monkeypatch.setattr(ranking, "SCORE_BROADCAST_MAX_NODES", 0)
+        g = Graph(nodes=nodes, edges=edges)
+        try:
+            per_iter = {}
+            for name, run in runs.items():
+                jobs(run, g, 1)  # warm: prepared edges, counts, topic state
+                per_iter[name] = (jobs(run, g, 6) - jobs(run, g, 3)) / 3
+                if per_iter[name] > ceilings[name]:
+                    failures.append(f"{mode} {name}: {per_iter[name]} > {ceilings[name]}")
+            if per_iter["pagerank"] != per_iter["personalized_pagerank"]:
+                failures.append(f"{mode}: pagerank/ppr differ: {per_iter}")
+        finally:
+            g.release()
+    assert not failures, "\n".join(failures)

@@ -6,12 +6,15 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from bigdata_hits_spark.operators import ranking
 from bigdata_hits_spark.operators.graph import Graph, neighborhood, topic_induced
 from bigdata_hits_spark.operators.ranking import (
+    RankResult,
     hits,
     hits_query_dependent,
     hits_topic_exclusive,
     list_topics,
+    pagerank,
     salsa,
     salsa_simplified,
 )
@@ -127,19 +130,86 @@ def test_topic_specific_hits_micrograph(spark, g):
     assert_close(scores_dict(res.auths), ea)
 
 
-def test_shuffle_score_join_matches_broadcast(spark, g):
+def test_shuffle_score_join_matches_broadcast(spark, g, monkeypatch):
     """Both power-step modes compute identical scores (the shuffle mode is
-    the >SCORE_BROADCAST_MAX_NODES scale path; the micrograph exercises
-    its correctness)."""
-    for kwargs in ({}, {"teleport": "topic", "topic": "y", "beta": 0.8}):
-        b = hits(g, k=3, score_join="broadcast", **kwargs)
-        s = hits(g, k=3, score_join="shuffle", **kwargs)
+    the >SCORE_BROADCAST_MAX_NODES scale path; lowering the threshold to
+    0 sends the micrograph down it)."""
+    runs = [
+        lambda: hits(g, k=3),
+        lambda: hits(g, k=3, teleport="topic", topic="y", beta=0.8),
+        lambda: salsa(g, k=3),
+    ]
+    broadcast = [run() for run in runs]
+    monkeypatch.setattr(ranking, "SCORE_BROADCAST_MAX_NODES", 0)
+    for run, b in zip(runs, broadcast):
+        s = run()
         assert_close(scores_dict(s.hubs), scores_dict(b.hubs))
         assert_close(scores_dict(s.auths), scores_dict(b.auths))
-    b = salsa(g, k=3, score_join="broadcast")
-    s = salsa(g, k=3, score_join="shuffle")
-    assert_close(scores_dict(s.hubs), scores_dict(b.hubs))
-    assert_close(scores_dict(s.auths), scores_dict(b.auths))
+
+
+def _pagerank_python(nodes, edges, k, beta):
+    """Weighted PageRank where a source whose out-weights sum to 0
+    contributes nothing (the oracle's NULL ``w / ow``)."""
+    out_w = {}
+    for s, _, w in edges:
+        out_w[s] = out_w.get(s, 0.0) + w
+    p = {v: 1.0 / len(nodes) for v in nodes}
+    for _ in range(k):
+        c = dict.fromkeys(nodes, 0.0)
+        for s, d, w in edges:
+            if out_w[s]:
+                c[d] += w / out_w[s] * p[s]
+        r = {v: beta * c[v] + (1 - beta) / len(nodes) for v in nodes}
+        total = sum(r.values())
+        p = {v: x / total for v, x in r.items()}
+    return p
+
+
+#: b's out-weights sum to 0.
+ZERO_OUT_EDGES = [
+    ("a", "b", 1.0),
+    ("a", "c", 1.0),
+    ("b", "c", 0.0),
+    ("c", "a", 2.0),
+    ("d", "a", 1.0),
+]
+
+
+@pytest.mark.parametrize(
+    "nodes, edges, run, want",
+    [
+        pytest.param(
+            NODES,
+            [(s, d, 0.0) for s, d, _ in EDGES],
+            lambda g: hits(g, k=3, weight="w"),
+            ({"a": 0.0, "b": 0.0, "c": 0.0}, {"c": 0.0, "d": 0.0}),
+            id="hits_all_zero_weights",
+        ),
+        pytest.param(
+            NODES,
+            ZERO_OUT_EDGES,
+            lambda g: pagerank(g, k=3, weight="w"),
+            _pagerank_python([n for n, _ in NODES], ZERO_OUT_EDGES, 3, 0.85),
+            id="pagerank_zero_out_weight",
+        ),
+        pytest.param([], [], lambda g: hits(g, k=3), ({}, {}), id="hits_no_nodes"),
+        pytest.param([], [], lambda g: pagerank(g, k=3), {}, id="pagerank_no_nodes"),
+    ],
+)
+def test_degenerate_inputs_rank_without_raising(spark, nodes, edges, run, want):
+    """A zero norm leaves the vector unchanged, a zero-out-weight source
+    contributes nothing, and a graph with no nodes ranks to empty
+    vectors — none of them raises."""
+    g = Graph(
+        nodes=spark.createDataFrame(nodes, "id string, labels string"),
+        edges=spark.createDataFrame(edges, "src string, dst string, w double"),
+    )
+    out = run(g)
+    if isinstance(out, RankResult):
+        assert_close(scores_dict(out.hubs), want[0])
+        assert_close(scores_dict(out.auths), want[1])
+    else:
+        assert_close(scores_dict(out), want)
 
 
 def test_tol_early_stop_converges(spark, g):
