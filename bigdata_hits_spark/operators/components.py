@@ -13,9 +13,9 @@ are DataFrame join+groupBy (shuffle on node id).  Every fixpoint loop in
 this module (min-label, star contraction, the SCC trim/color/mark
 phases) is a round body handed to
 :func:`~bigdata_hits_spark.plans.iterate.fixpoint`, which owns the
-lineage cut, check cadence, stop test and round budget.  Rounds needed
-≈ graph diameter; dedup-cluster graphs (LSH buckets ∪ verified pairs)
-have tiny diameters, so 3-5 rounds close them.
+lineage cut, the per-round measure and stop test, and the round budget.
+Rounds needed ≈ graph diameter; dedup-cluster graphs (LSH buckets ∪
+verified pairs) have tiny diameters, so 3-5 rounds close them.
 
 At 1000-executor scale the per-round cost is one shuffle of (node,
 label) pairs — compact longs/strings, never document bodies.  For
@@ -262,15 +262,17 @@ def _mark_round(intra: DataFrame, state: DataFrame) -> DataFrame:
     )
 
 
+#: Outer-round guard of :func:`strongly_connected_components`: each
+#: outer round retires at least one SCC per color class, so only a
+#: deeply nested condensation (a downstream-increasing chain of 2-cycles
+#: retires ONE SCC per outer round) gets near it.
+_SCC_MAX_OUTER = 100
+
+
 def strongly_connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_outer: int = 100,
-    max_rounds: int = 80,
-    check_every: int = 5,
-    max_doublings: int = 2,
-    shortcut_budget: float = 6.0,
 ) -> DataFrame:
     """(id, scc) for every node of a DIRECTED edge set; ``scc`` is the
     minimum node id in the strongly connected component.
@@ -294,37 +296,17 @@ def strongly_connected_components(
        ``scc = color``.
     4. Remove emitted nodes; repeat.  Every remaining node has a
        reachable color root, so each outer round retires >= one SCC per
-       color class — progress is guaranteed; ``max_outer`` only bounds
-       adversarial condensation nesting.  The default (100) is sized for
-       worst-case chained shapes (e.g. a downstream-increasing chain of
-       2-cycles retires ONE SCC per outer round, so depth ~= chain
-       length), not just the O(log n) web-bow-tie regime — running out
-       raises loudly rather than mislabeling, and the path-doubling
-       shortcuts collapse most deep condensations well before the bound.
+       color class — progress is guaranteed; ``_SCC_MAX_OUTER`` only
+       bounds adversarial condensation nesting, and running out raises
+       loudly rather than mislabeling.
 
-    Loop discipline: trim, color and mark each run on
-    :func:`~bigdata_hits_spark.plans.iterate.fixpoint` with one check
-    per ``check_every`` rounds.  Color and mark are MONOTONE (labels
-    only decrease, marks only grow), so a check that sees no changed
-    row is exactly convergence; trim stops when the edge count stops
-    moving.  Batching trades <= check_every - 1 no-op rounds (cheap:
-    scalar frames) for a ~check_every reduction in action count, which
-    is what dominates iterative wall time.  At 1000-executor scale each
+    Trim, color and mark each run on
+    :func:`~bigdata_hits_spark.plans.iterate.fixpoint` with no round
+    budget: trim only drops edges (it stops when the edge count stops
+    moving), color labels only decrease and marks only grow (they stop
+    at a round that changed no row), so every phase terminates, in as
+    many rounds as the graph is deep.  At 1000-executor scale each
     round is one hash exchange of the label frame, keyed on node id.
-
-    Round-count accelerator: before the color phase, the post-trim edge
-    set is augmented with SHORTCUT edges by guarded path-doubling —
-    ``max_doublings`` rounds of ``E := E ∪ E·E`` kept only while
-    ``|E'| <= shortcut_budget × |E_original|``.  Shortcuts are real
-    reachability paths, so min-label fixpoints over the augmented set
-    are unchanged but arrive in ~1/2^doublings the rounds; the backward
-    mark may use them too because SCC confinement only needs the two
-    ENDPOINT colors to match (a marked vertex reaches its root by any
-    path, through any intermediate colors).  The budget is the 100 TB
-    guard: on a dense giant-SCC core the square blows up, the guard
-    trips, and the loops fall back to linear rounds — never a memory
-    cliff.  Trim always runs on the ORIGINAL edges (shortcuts would
-    fabricate in/out-degrees).
     """
     e = materialize(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
@@ -337,7 +319,7 @@ def strongly_connected_components(
     parts: list[DataFrame] = []
     out = nodes.select("id", F.col("id").alias("scc")).filter(F.lit(False))
 
-    for _ in range(max_outer):
+    for _ in range(_SCC_MAX_OUTER):
         if nodes.isEmpty():
             break
 
@@ -350,48 +332,20 @@ def strongly_connected_components(
         # next core is identical, and every endpoint of it is core.
         orig_nodes = nodes
         e, _, _ = fixpoint(
-            e, _trim_round, DataFrame.count, max_rounds=max_rounds,
-            check_every=check_every, until="stable", name="scc trim",
+            e, _trim_round, DataFrame.count, max_rounds=None, until="stable",
+            name="scc trim",
         )
         nodes = materialize(e.select(F.col("src").alias("id")).distinct())
         parts.append(
-            materialize(
-                orig_nodes.join(nodes, "id", "left_anti").select(
-                    "id", F.col("id").alias("scc")
-                )
-            )
+            orig_nodes.join(nodes, "id", "left_anti").select("id", F.col("id").alias("scc"))
         )
         if nodes.isEmpty():
             continue
 
-        # 1b) Guarded path-doubling: augment with shortcut edges while
-        # the size budget holds (see docstring).  ``prop`` drives the
-        # label/mark fixpoints; ``e`` stays the real edge set.
-        prop = e
-        n_e = max(e.count(), 1)
-        n_prev = n_e
-        for _ in range(max_doublings):
-            sq = (
-                prop.select("src", F.col("dst").alias("mid"))
-                .join(prop.select(F.col("src").alias("mid"), "dst"), "mid")
-                .select("src", "dst")
-                .unionByName(prop)
-                .distinct()
-                .localCheckpoint(eager=False)
-            )
-            n_sq = sq.count()
-            if n_sq > shortcut_budget * n_e:
-                break
-            prop = sq
-            if n_sq == n_prev:
-                break  # closure reached; squaring again is a no-op
-            n_prev = n_sq
-
         # 2) Forward min-label coloring to fixpoint.
-        labels = materialize(nodes.select("id", F.col("id").alias("color")))
         labels, _, _ = fixpoint(
-            labels, partial(_color_round, prop), _n_changed, max_rounds=max_rounds,
-            check_every=check_every, name="scc coloring",
+            nodes.select("id", F.col("id").alias("color")), partial(_color_round, e),
+            _n_changed, max_rounds=None, name="scc coloring",
         )
         labels = labels.select("id", "color")
 
@@ -399,22 +353,18 @@ def strongly_connected_components(
         lsrc = labels.select(F.col("id").alias("src"), F.col("color").alias("c_src"))
         ldst = labels.select(F.col("id").alias("dst"), F.col("color").alias("c_dst"))
         intra = materialize(
-            prop.join(lsrc, "src")
+            e.join(lsrc, "src")
             .join(ldst, "dst")
             .filter(F.col("c_src") == F.col("c_dst"))
             .select("src", "dst")
         )
-        mark = materialize(
-            labels.select("id", "color", (F.col("id") == F.col("color")).alias("m"))
-        )
         mark, _, _ = fixpoint(
-            mark, partial(_mark_round, intra), _n_changed, max_rounds=max_rounds,
-            check_every=check_every, name="scc backward mark",
+            labels.select("id", "color", (F.col("id") == F.col("color")).alias("m")),
+            partial(_mark_round, intra), _n_changed, max_rounds=None,
+            name="scc backward mark",
         )
 
-        found = materialize(
-            mark.filter(F.col("m")).select("id", F.col("color").alias("scc"))
-        )
+        found = mark.filter(F.col("m")).select("id", F.col("color").alias("scc"))
         parts.append(found)
         found_ids = found.select("id")
         nodes = materialize(nodes.join(found_ids, "id", "left_anti"))
@@ -426,8 +376,8 @@ def strongly_connected_components(
     else:
         if not nodes.isEmpty():
             raise RuntimeError(
-                f"scc did not finish in {max_outer} outer rounds; "
-                "the condensation DAG nests deeper than expected — raise max_outer"
+                f"scc did not finish in {_SCC_MAX_OUTER} outer rounds; "
+                "the condensation DAG nests deeper than expected"
             )
 
     for p in parts:
@@ -440,7 +390,6 @@ def persist_scc_labels(
     table: str,
     src: str = "src",
     dst: str = "dst",
-    **kw,
 ) -> float:
     """Run :func:`strongly_connected_components` ONCE and persist the
     (id, scc) labeling as a managed parquet table — the serving-layout
@@ -448,26 +397,19 @@ def persist_scc_labels(
     applied to the heaviest iterative extra (VERDICT r10 #3): SCC
     labels change only when the graph changes, so a nightly build pays
     the trim + FW-BW fixpoints once and every later session serves the
-    labeling with a table scan instead of ~20-80 s of label rounds.
-    The label frame is node-sized scalars (two columns), so the table
-    is tiny relative to the edges it summarizes.  Returns the build
-    time in seconds; extra kwargs pass through to the SCC solver."""
+    labeling with ``spark.table(table)`` instead of ~20-80 s of label
+    rounds.  The label frame is node-sized scalars (two columns), so the
+    table is tiny relative to the edges it summarizes.  Returns the
+    build time in seconds."""
     import time
 
     from bigdata_hits_spark.sources.bucketed import clear_orphaned_location
 
     t0 = time.time()
-    labels = strongly_connected_components(edges, src, dst, **kw)
+    labels = strongly_connected_components(edges, src, dst)
     clear_orphaned_location(edges.sparkSession, table)
     labels.write.format("parquet").mode("overwrite").saveAsTable(table)
     return round(time.time() - t0, 3)
-
-
-def scc_labels_from_layout(spark, table: str) -> DataFrame:
-    """(id, scc) from a labeling persisted by :func:`persist_scc_labels`
-    — identical rows to the in-session solver on the same edges
-    (equality-tested in tests/test_components.py), at table-scan cost."""
-    return spark.table(table)
 
 
 def dedup_survivors_ranked(

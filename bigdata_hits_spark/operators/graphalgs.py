@@ -363,11 +363,12 @@ def label_propagation(
             .select("id", F.col("best.community").alias("community"))
         )
         # Unlike the ranking loop there is NO per-round driver scalar, so
-        # rounds compose into one lazy plan and the whole propagation runs
-        # as a single job; checkpoint on a cadence only to bound plan
-        # depth for large k.  LAZY (eager would launch a job mid-loop):
-        # the final action materializes the cut, and the logical plan
-        # downstream of it is a flat LogicalRDD either way.
+        # rounds compose into one lazy plan; checkpoint on a cadence only
+        # to bound plan depth for large k.  Not free: with adaptive
+        # execution the lazy cut already runs the rounds' shuffle stages
+        # as jobs, and only the final write of the cut waits for the
+        # caller's action.  The logical plan downstream of it is a flat
+        # LogicalRDD either way.
         if (i + 1) % _LP_CHECKPOINT_EVERY == 0 and (i + 1) < k:
             labels = labels.localCheckpoint(eager=False)
     if use_encode:
@@ -480,7 +481,9 @@ def bfs_distances(
     settled vectors are node-sized — the only moving data.  Rounds
     compose into one lazy plan (no per-round driver action), lineage
     cut on the same cadence as label_propagation to bound plan depth
-    for large ``max_depth``.
+    for large ``max_depth``; the rounds still cost one job per shuffle
+    stage under adaptive execution, run by each cut and the caller's
+    action.
     """
     if sym is None:
         if directed:

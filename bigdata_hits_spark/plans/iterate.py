@@ -13,8 +13,12 @@ Convergence loops (connected components, star contraction, the three SCC
 fixpoints, k-core, k-truss) are supersteps in the Pregelix sense: one
 join+group-by round body, repeated until nothing moves.  They differ only
 in that body and in what they count, so :func:`fixpoint` owns everything
-else — the per-round lineage cut, the check cadence, the stop test and
-the round budget — and the operators pass a step and a measure.
+else — the per-round lineage cut, the per-round measure and stop test,
+and the round budget — and the operators pass a step and a measure.
+A lazy ``localCheckpoint`` is not free: with adaptive query execution
+(on by default) cutting a plan already runs every shuffle and broadcast
+stage of the round as jobs, so skipping a round's measure saves only
+the measure's own job, and :func:`fixpoint` measures every round.
 Fixed-k loops (HITS/SALSA and the PageRank family, label propagation,
 BFS, feature propagation) have no convergence test and keep their own
 cadence; the ranking ones end every iteration in :func:`normalized`.
@@ -132,10 +136,10 @@ def materialize(df: DataFrame) -> DataFrame:
 
 def _cut(df: DataFrame) -> DataFrame:
     """The per-round lineage cut of :func:`fixpoint`: a LAZY
-    ``localCheckpoint`` that the loop's next check materializes in-job,
-    with :func:`materialize`'s estimate guard probed on the optimized
-    plan (which needs no materialization).  Only a compounded estimate
-    pays the eager persist-backed reset."""
+    ``localCheckpoint`` whose blocks the round's measure writes, with
+    :func:`materialize`'s estimate guard probed on the optimized plan
+    (which needs no materialization).  Only a compounded estimate pays
+    the eager persist-backed reset."""
     return df.localCheckpoint(eager=False) if _estimate_sane(df) else _stats_reset(df)
 
 
@@ -145,7 +149,6 @@ def fixpoint(
     measure: Callable[[DataFrame], Any],
     *,
     max_rounds: int | None,
-    check_every: int = 1,
     until: str = "zero",
     name: str = "fixpoint",
     strict: bool = True,
@@ -153,21 +156,18 @@ def fixpoint(
     """Run ``state = step(state)`` to a fixpoint; returns
     ``(state, rounds, converged)``.
 
-    - **Lineage cut** after every round (:func:`_cut`): lazy, so rounds
-      between checks chain into the next check's single job, and the
+    - **Lineage cut** after every round (:func:`_cut`): lazy, so the
+      round's measure is the action that writes it, and the
       size-estimate guard keeps joins against the loop's own aggregates
       from compounding Catalyst's estimate.
-    - **Check cadence**: ``measure(state)`` — one action, the loop's
-      own count or aggregate — runs after round 1, after every
-      ``check_every``-th round, and after the last budgeted round.
-      Rounds in between cost no job; monotone loops only ever pay
-      ``<= check_every - 1`` no-op rounds for the batching.
+    - **Measure** after every round: ``measure(state)`` — one action,
+      the loop's own count or aggregate.
     - **Stop test**: a measure of ``0`` always stops (no row changed,
       or nothing is left to peel).  ``until="zero"`` stops on nothing
       else — the measure counts rows the LAST round changed, and a
       repeat of a non-zero count is still progress.
       ``until="stable"`` also stops when the measure equals the
-      previous check's — for measures of the state itself (a size, a
+      previous round's — for measures of the state itself (a size, a
       fingerprint) that only move while the loop does.
     - **Round budget**: ``max_rounds`` (None = unbounded).  Running out
       raises one error for every loop, ``"<name> did not converge in N
@@ -175,8 +175,8 @@ def fixpoint(
       instead, for callers that recover (escalate to another
       algorithm, fold more work per round).
 
-    The returned state is always the one the last check measured, so
-    its checkpoint is already materialized.
+    The returned state is always the one the last measure read, so its
+    checkpoint is already materialized.
     """
     if until not in ("zero", "stable"):
         raise ValueError(f"unknown stop test {until!r} (expected 'zero' or 'stable')")
@@ -185,11 +185,10 @@ def fixpoint(
     while max_rounds is None or rounds < max_rounds:
         state = _cut(step(state))
         rounds += 1
-        if rounds == 1 or rounds % check_every == 0 or rounds == max_rounds:
-            m = measure(state)
-            if m == 0 or (until == "stable" and m == prev):
-                return state, rounds, True
-            prev = m
+        m = measure(state)
+        if m == 0 or (until == "stable" and m == prev):
+            return state, rounds, True
+        prev = m
     if strict:
         raise RuntimeError(f"{name} did not converge in {max_rounds} rounds")
     return state, rounds, False

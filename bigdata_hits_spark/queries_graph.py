@@ -323,25 +323,16 @@ def _scc_sql() -> str:
     )
 
 
-#: Session memo for the SCC label frame (applicationId, sf_dir) — the
-#: condensation row and repeated bench passes reuse one labeling instead
-#: of re-running the iterative FW-BW loops (the derived._GRAPH_CACHE
-#: pattern; appIds are never reused, so dead sessions can't pin state).
-_SCC_CACHE: dict[tuple[str, str], object] = {}
-
-
 def _scc_labels(spark, sf_dir):
+    """Session-memoized SCC labeling on g_pp — the condensation row and
+    repeated bench passes reuse one labeling instead of re-running the
+    iterative FW-BW loops, and ``derived.clear_graph_cache`` releases
+    it with the graph."""
     from bigdata_hits_spark.operators.components import strongly_connected_components
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SCC_CACHE:
-        live = spark.sparkContext.applicationId
-        for stale in [k for k in _SCC_CACHE if k[0] != live]:
-            _SCC_CACHE.pop(stale)
-        g = derived.g_pp(spark, sf_dir)
-        e = g.edges.filter(F.col("weight") <= SCC_MAX_WEIGHT).select("src", "dst")
-        _SCC_CACHE[key] = materialize(strongly_connected_components(e))
-    return _SCC_CACHE[key]
+    g = derived.g_pp(spark, sf_dir)
+    e = g.edges.filter(F.col("weight") <= SCC_MAX_WEIGHT).select("src", "dst")
+    return g.memo(("scc_labels",), lambda: materialize(strongly_connected_components(e)))
 
 
 @register("graph_scc", _scc_sql())

@@ -285,10 +285,7 @@ def main() -> None:
     # graph_scc_layout from the table in both passes — pass 0 is the
     # cold measurement (target: ~table-scan cost vs the 80 s in-session
     # fixpoints).
-    from bigdata_hits_spark.operators.components import (
-        persist_scc_labels,
-        scc_labels_from_layout,
-    )
+    from bigdata_hits_spark.operators.components import persist_scc_labels
     from bigdata_hits_spark.queries_graph import SCC_MAX_WEIGHT
     from pyspark.sql import functions as F
 
@@ -299,7 +296,7 @@ def main() -> None:
     )
     scc_layout_build = persist_scc_labels(scc_edges, "t_scale_scc")
     print(f"scc layout build: {scc_layout_build}", file=sys.stderr)
-    registry["graph_scc_layout"] = lambda s, d: scc_labels_from_layout(s, "t_scale_scc")
+    registry["graph_scc_layout"] = lambda s, d: s.table("t_scale_scc")
 
     # ANN index COLD-build costs at 10x (VERDICT r10 #5): the serving
     # rows below reuse session-cached indexes, so the builds are timed

@@ -145,9 +145,9 @@ def test_scc_known_structure(spark):
 
 
 def test_scc_long_cycle_batched_checks(spark):
-    """A 25-cycle with a 6-deep tail forces multi-batch trim AND
-    multi-batch color/mark fixpoints (check_every=4): the batched
-    convergence discipline must not early-stop or over-run."""
+    """A 25-cycle with a 6-deep tail forces multi-round trim AND
+    multi-round color/mark fixpoints: the per-round convergence test
+    must not early-stop or over-run."""
     from bigdata_hits_spark.operators.components import strongly_connected_components
 
     n = 25
@@ -155,21 +155,51 @@ def test_scc_long_cycle_batched_checks(spark):
     edges += [(100 + i, 100 + i + 1) for i in range(6)]   # tail chain
     edges += [(106, 5)]                                   # tail feeds the cycle
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["id"]: r["scc"] for r in
-           strongly_connected_components(df, check_every=4).collect()}
+    got = {r["id"]: r["scc"] for r in strongly_connected_components(df).collect()}
     assert all(got[i] == 0 for i in range(n))
     assert all(got[100 + i] == 100 + i for i in range(7))
     assert len(got) == n + 7
 
 
+def test_scc_matches_networkx_random(spark):
+    """A seeded random digraph (300 edges over 150 node ids: a 95-node
+    giant SCC, 53 singletons in and out of it, two self-loops) labels
+    exactly like networkx's min-member SCC ids, at one shuffle partition
+    and at seven — the result must not depend on the partitioning."""
+    import random
+
+    import networkx as nx
+
+    from bigdata_hits_spark.operators.components import strongly_connected_components
+
+    rng = random.Random(7)
+    edges: set[tuple[int, int]] = set()
+    while len(edges) < 300:
+        edges.add((rng.randrange(150), rng.randrange(150)))
+    want = {
+        v: min(comp)
+        for comp in nx.strongly_connected_components(nx.DiGraph(list(edges)))
+        for v in comp
+    }
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    try:
+        for partitions in (1, 7):
+            spark.conf.set(key, str(partitions))
+            df = spark.createDataFrame(sorted(edges), "src long, dst long")
+            got = {r["id"]: r["scc"] for r in strongly_connected_components(df).collect()}
+            assert got == want, f"{partitions} shuffle partitions"
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_scc_layout_serves_identical_labels(spark):
-    """persist_scc_labels + scc_labels_from_layout round-trip: the
-    persisted table serves EXACTLY the in-session solver's labeling,
-    and the serving plan is a table scan (no joins, no aggregates —
-    the whole point of paying the build once)."""
+    """persist_scc_labels + spark.table round-trip: the persisted table
+    serves EXACTLY the in-session solver's labeling, and the serving
+    plan is a table scan (no joins, no aggregates — the whole point of
+    paying the build once)."""
     from bigdata_hits_spark.operators.components import (
         persist_scc_labels,
-        scc_labels_from_layout,
         strongly_connected_components,
     )
 
@@ -177,7 +207,7 @@ def test_scc_layout_serves_identical_labels(spark):
     df = spark.createDataFrame(edges, "src long, dst long")
     build_sec = persist_scc_labels(df, "t_test_scc_layout")
     assert build_sec > 0
-    served = scc_labels_from_layout(spark, "t_test_scc_layout")
+    served = spark.table("t_test_scc_layout")
     live = strongly_connected_components(df)
     assert {tuple(r) for r in served.collect()} == {tuple(r) for r in live.collect()}
     plan = served._jdf.queryExecution().executedPlan().toString()

@@ -435,8 +435,8 @@ def test_materialize_resets_size_estimate(spark):
     is estimated at the left side's size): the estimate's bit-length
     doubles per round to ~10^160; the persist-backed materialize stays
     at the actual few-KB size.  The fixpoint harness's lazy per-round
-    cut carries the same guard: five compounding rounds batched between
-    two checks."""
+    cut carries the same guard: five compounding rounds under a measure
+    that never repeats and never reaches 0, so none of them stops."""
     from bigdata_hits_spark.plans.iterate import fixpoint, materialize
 
     def self_join(df):
@@ -456,12 +456,12 @@ def test_materialize_resets_size_estimate(spark):
 
     def count(d):
         counts.append(d.count())
-        return counts[-1]
+        return len(counts)
 
     ck, rounds, converged = fixpoint(
-        start, self_join, count, max_rounds=5, check_every=5, until="stable"
+        start, self_join, count, max_rounds=5, until="stable", strict=False
     )
-    assert (rounds, converged) == (5, True)
+    assert (rounds, converged) == (5, False)
     n = counts[-1]
     assert n == 100
     size = int(ck._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
@@ -502,11 +502,11 @@ def _n_done(state):
 
 
 def test_fixpoint_zero_stop_ignores_repeated_changed_count(spark):
-    """until="zero" stops only when a check sees no changed row: the
-    changed-count reads 2 at every check of a 9-id chain (rounds 1, 2,
-    4 with check_every=2) and must not stop the loop; round 6 is the
-    first check after the chain is exhausted.  Read as a stable measure,
-    the same repeated 2 would stop it at round 2 with ids undone."""
+    """until="zero" stops only when a round changes no row: the
+    changed-count reads 2 at each of rounds 1-4 of a 9-id chain and
+    must not stop the loop; round 5 is the first after the chain is
+    exhausted.  Read as a stable measure, the same repeated 2 would
+    stop it at round 2 with ids undone."""
     from bigdata_hits_spark.plans.iterate import fixpoint
 
     seen = []
@@ -516,22 +516,21 @@ def test_fixpoint_zero_stop_ignores_repeated_changed_count(spark):
         return seen[-1]
 
     out, rounds, converged = fixpoint(
-        _chain(spark, 9), _spread_two, changed, max_rounds=20, check_every=2
+        _chain(spark, 9), _spread_two, changed, max_rounds=20
     )
-    assert (rounds, converged) == (6, True)
-    assert seen == [2, 2, 2, 0]
+    assert (rounds, converged) == (5, True)
+    assert seen == [2, 2, 2, 2, 0]
     assert _n_done(out) == 9
 
     early, rounds, _ = fixpoint(
-        _chain(spark, 9), _spread_two, _n_changed, max_rounds=20, check_every=2,
-        until="stable",
+        _chain(spark, 9), _spread_two, _n_changed, max_rounds=20, until="stable"
     )
     assert rounds == 2 and _n_done(early) == 5
 
 
 def test_fixpoint_stable_stops_on_unchanged_measure(spark):
-    """until="stable" stops at the first check whose measure equals the
-    previous check's: done-counts 3, 5, 7, 9, 9 stop at round 5."""
+    """until="stable" stops at the first round whose measure equals the
+    previous round's: done-counts 3, 5, 7, 9, 9 stop at round 5."""
     from bigdata_hits_spark.plans.iterate import fixpoint
 
     out, rounds, converged = fixpoint(
@@ -555,12 +554,11 @@ def test_fixpoint_budget_error_message(spark):
 
 def test_fixpoint_returns_non_convergence(spark):
     """strict=False hands non-convergence back to the caller with the
-    state the last budgeted round reached (checked, so materialized)."""
+    state the last budgeted round reached (measured, so materialized)."""
     from bigdata_hits_spark.plans.iterate import fixpoint
 
     out, rounds, converged = fixpoint(
-        _chain(spark, 9), _spread_two, _n_changed, max_rounds=2, check_every=5,
-        strict=False,
+        _chain(spark, 9), _spread_two, _n_changed, max_rounds=2, strict=False
     )
     assert (rounds, converged) == (2, False)
     assert _n_done(out) == 5
