@@ -4,10 +4,10 @@ and the one fixpoint driver every convergence loop runs on.
 The reference's power loops collect the norm scalar to the driver twice per
 iteration and never cache, so every action recomputes a lineage that grows
 with the iteration count and re-reads the input CSVs (the reference's
-``base_hits.py``; SURVEY §3.1, §4.2).  Here every ranking vector is
-normalized by :func:`normalized`, which cuts its lineage with a lazy
-``localCheckpoint`` and pays checkpoint and norm scalar in ONE job, so a
-loop's plan never grows across iterations (SURVEY §4.3).
+``base_hits.py``; SURVEY §3.1, §4.2).  Here every Spark-tier ranking
+vector is normalized by :func:`normalized`, which cuts its lineage with a
+lazy ``localCheckpoint`` and pays checkpoint and norm scalar in ONE job,
+so a loop's plan never grows across iterations (SURVEY §4.3).
 
 Convergence loops (connected components, star contraction, the three SCC
 fixpoints, k-core, k-truss) are supersteps in the Pregelix sense: one
@@ -21,7 +21,10 @@ stage of the round as jobs, so skipping a round's measure saves only
 the measure's own job, and :func:`fixpoint` measures every round.
 Fixed-k loops (HITS/SALSA and the PageRank family, label propagation,
 BFS, feature propagation) have no convergence test and keep their own
-cadence; the ranking ones end every iteration in :func:`normalized`.
+cadence.  The ranking ones end every iteration in :func:`normalized` on
+the broadcast and shuffle tiers; a graph of at most
+``ranking.LOCAL_MAX_EDGES`` edges ranks on the driver in numpy and runs
+no Spark job per iteration at all.
 """
 
 from __future__ import annotations

@@ -28,3 +28,33 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def sf_dir_oracle():
     return SF_DIR_ORACLE
+
+
+@pytest.fixture(params=["broadcast", "shuffle"])
+def spark_tier(request, monkeypatch):
+    """Force the ranking operators onto one Spark tier.  Test graphs are
+    far below ``ranking.LOCAL_MAX_EDGES``, so they rank on the driver
+    unless the cap is lowered."""
+    from bigdata_hits_spark.operators import ranking
+
+    monkeypatch.setattr(ranking, "LOCAL_MAX_EDGES", -1)
+    if request.param == "shuffle":
+        monkeypatch.setattr(ranking, "SCORE_BROADCAST_MAX_NODES", 0)
+    return request.param
+
+
+@pytest.fixture
+def on_every_tier(monkeypatch):
+    """``on_every_tier(run)`` -> {tier: run()} for the local, broadcast
+    and shuffle ranking tiers, in that order."""
+    from bigdata_hits_spark.operators import ranking
+
+    def run_all(run):
+        out = {"local": run()}
+        monkeypatch.setattr(ranking, "LOCAL_MAX_EDGES", -1)
+        out["broadcast"] = run()
+        monkeypatch.setattr(ranking, "SCORE_BROADCAST_MAX_NODES", 0)
+        out["shuffle"] = run()
+        return out
+
+    return run_all

@@ -1,10 +1,9 @@
 """PageRank tests: numpy power-iteration cross-check on a micro-graph,
-dropped-node semantics, mode equivalence (broadcast vs shuffle)."""
+dropped-node semantics, tier equivalence (local, broadcast, shuffle)."""
 
 import numpy as np
 import pytest
 
-from bigdata_hits_spark.operators import ranking
 from bigdata_hits_spark.operators.graph import Graph
 from bigdata_hits_spark.operators.ranking import hits, pagerank, personalized_pagerank, salsa
 
@@ -51,18 +50,18 @@ def test_pagerank_matches_numpy(g, weighted):
         assert got[n] == pytest.approx(want[n], rel=1e-9)
 
 
-def test_pagerank_modes_agree(g, monkeypatch):
+def test_pagerank_modes_agree(g, on_every_tier):
     """PageRank and personalized PageRank compute identical scores on the
-    broadcast and the shuffle power step (lowering the threshold to 0
-    sends the micrograph down the shuffle path)."""
+    local tier (the micrograph's default), the broadcast power step
+    (LOCAL_MAX_EDGES lowered) and the shuffle power step
+    (SCORE_BROADCAST_MAX_NODES lowered to 0 as well)."""
     runs = [lambda: pagerank(g, k=3), lambda: personalized_pagerank(g, "l", k=3)]
-    broadcast = [{r["id"]: r["score"] for r in run().collect()} for run in runs]
-    monkeypatch.setattr(ranking, "SCORE_BROADCAST_MAX_NODES", 0)
-    for run, b in zip(runs, broadcast):
-        s = {r["id"]: r["score"] for r in run().collect()}
-        assert set(b) == set(s)
-        for n in b:
-            assert b[n] == pytest.approx(s[n], rel=1e-12)
+    for run in runs:
+        out = {t: dict(map(tuple, df.collect())) for t, df in on_every_tier(run).items()}
+        for tier in ("broadcast", "shuffle"):
+            assert set(out[tier]) == set(out["local"])
+            for n in out["local"]:
+                assert out[tier][n] == pytest.approx(out["local"][n], rel=1e-12)
 
 
 def test_pagerank_early_stop(g):

@@ -209,13 +209,16 @@ def test_power_step_shuffle_mode_has_no_broadcast(spark, sf_dir_oracle):
     assert "InMemoryTableScan" in plan
 
 
-def test_bucketed_ranking_edges_no_exchange(spark, sf_dir_oracle):
+def test_bucketed_ranking_edges_no_exchange(spark, sf_dir_oracle, monkeypatch):
     """Prepared HITS step relations persisted as bucketed tables must run
     the power step with ZERO edge-sized shuffle on a cold session — the
     bucketed scan satisfies the grouped sum's distribution, so the only
-    exchange left is the broadcast of the (node-sized) score vector."""
+    exchange left is the broadcast of the (node-sized) score vector.
+    The test graph is below LOCAL_MAX_EDGES, so the cap is lowered to
+    rank it on the Spark tier the bucketed layout serves."""
     from pyspark.sql import functions as F
 
+    from bigdata_hits_spark.operators import ranking
     from bigdata_hits_spark.operators.ranking import (
         _hits_edges,
         _step,
@@ -225,6 +228,7 @@ def test_bucketed_ranking_edges_no_exchange(spark, sf_dir_oracle):
     )
     from bigdata_hits_spark.sources.derived import _g_ps
 
+    monkeypatch.setattr(ranking, "LOCAL_MAX_EDGES", -1)
     g = _g_ps(spark, sf_dir_oracle)
     g2 = _g_ps(spark, sf_dir_oracle)  # fresh graph: no in-session prepared state
     try:
@@ -345,7 +349,7 @@ _BNLJ_ALLOWED = {
 }
 
 
-def test_all_declared_queries_plan_clean(spark, sf_dir_oracle):
+def test_all_declared_queries_plan_clean(spark, sf_dir_oracle, monkeypatch):
     """EVERY declared query — current and future, auto-derived from the
     registry instead of a per-round name list — must plan zero cartesian
     products and no broadcast-nested-loop joins beyond its documented
@@ -360,12 +364,19 @@ def test_all_declared_queries_plan_clean(spark, sf_dir_oracle):
     re-record hint, since session warm-state can shave an exchange
     non-deterministically (materialized memo stats flipping a join
     strategy) and a hard equality would flake on it.  Regenerate with
-    ``python scripts/gen_shuffle_budget.py`` and commit the diff."""
+    ``python scripts/gen_shuffle_budget.py`` and commit the diff.
+
+    The ranking rows rank their sf0.01 graphs on the driver by default;
+    LOCAL_MAX_EDGES is lowered so their Spark-tier plans — the ones that
+    run above the cap — stay held to the budget."""
     import json
     import os
 
     from bigdata_hits_spark import queries as q
+    from bigdata_hits_spark.operators import ranking
     from bigdata_hits_spark.plans.audit import count_shuffles
+
+    monkeypatch.setattr(ranking, "LOCAL_MAX_EDGES", -1)
 
     budget_path = os.path.join(os.path.dirname(__file__), "plan_shuffle_budget.json")
     with open(budget_path) as fh:
@@ -567,7 +578,12 @@ def test_fixpoint_returns_non_convergence(spark):
 #: Jobs per power iteration on the 300-node / 2,000-edge graph below,
 #: recorded when the PageRank and personalized-PageRank loops were
 #: merged: a ranking loop may get cheaper per iteration, never dearer.
+#: The local tier iterates in numpy and pays none; the Spark-tier rows
+#: lower LOCAL_MAX_EDGES to run the graph there.
 _RANKING_JOBS_PER_ITER = {
+    "local": {
+        "hits": 0, "hits_topic": 0, "salsa": 0, "pagerank": 0, "personalized_pagerank": 0,
+    },
     "broadcast": {
         "hits": 4, "hits_topic": 6, "salsa": 4, "pagerank": 4, "personalized_pagerank": 4,
     },
@@ -577,16 +593,18 @@ _RANKING_JOBS_PER_ITER = {
 }
 
 
-def test_ranking_jobs_per_iteration(spark, monkeypatch):
+def test_ranking_jobs_per_iteration(spark, monkeypatch, tmp_path):
     """(jobs at k=6 - jobs at k=3) / 3 on a warm graph, with every
-    output collected, in both power-step modes: no ranking loop pays
-    more jobs per iteration than its record, and PageRank and
-    personalized PageRank — one loop — pay the same."""
+    output collected, on all three tiers: no ranking loop pays more jobs
+    per iteration than its record, and PageRank and personalized
+    PageRank — one loop — pay the same.  A local-tier score vector is
+    one partition, so writing it as a score file is exactly one job."""
     import random
     import uuid
 
     from bigdata_hits_spark.operators import ranking
     from bigdata_hits_spark.operators.graph import Graph
+    from bigdata_hits_spark.sinks import write_scores_text
 
     rng = random.Random(7)
     ids = [f"v{i}" for i in range(300)]
@@ -608,13 +626,11 @@ def test_ranking_jobs_per_iteration(spark, monkeypatch):
     }
     sc = spark.sparkContext
 
-    def jobs(run, g, k):
+    def jobs(action):
         group = f"ranking-jobs-{uuid.uuid4().hex}"
         sc.setJobGroup(group, group)
         try:
-            out = run(g, k)
-            for df in (out.hubs, out.auths) if isinstance(out, ranking.RankResult) else (out,):
-                df.collect()
+            action()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
@@ -622,20 +638,33 @@ def test_ranking_jobs_per_iteration(spark, monkeypatch):
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
+    def ranked(run, g, k):
+        out = run(g, k)
+        for df in (out.hubs, out.auths) if isinstance(out, ranking.RankResult) else (out,):
+            df.collect()
+
     failures = []
     for mode, ceilings in _RANKING_JOBS_PER_ITER.items():
+        if mode != "local":
+            monkeypatch.setattr(ranking, "LOCAL_MAX_EDGES", -1)
         if mode == "shuffle":
             monkeypatch.setattr(ranking, "SCORE_BROADCAST_MAX_NODES", 0)
         g = Graph(nodes=nodes, edges=edges)
         try:
             per_iter = {}
             for name, run in runs.items():
-                jobs(run, g, 1)  # warm: prepared edges, counts, topic state
-                per_iter[name] = (jobs(run, g, 6) - jobs(run, g, 3)) / 3
+                jobs(lambda: ranked(run, g, 1))  # warm: prepared edges, counts, topic state
+                k6, k3 = jobs(lambda: ranked(run, g, 6)), jobs(lambda: ranked(run, g, 3))
+                per_iter[name] = (k6 - k3) / 3
                 if per_iter[name] > ceilings[name]:
                     failures.append(f"{mode} {name}: {per_iter[name]} > {ceilings[name]}")
             if per_iter["pagerank"] != per_iter["personalized_pagerank"]:
                 failures.append(f"{mode}: pagerank/ppr differ: {per_iter}")
+            if mode == "local":
+                hubs = ranking.hits(g, 3).hubs
+                n_write = jobs(lambda: write_scores_text(hubs, str(tmp_path / "hubs")))
+                if n_write != 1:
+                    failures.append(f"local write_scores_text: {n_write} jobs, expected 1")
         finally:
             g.release()
     assert not failures, "\n".join(failures)

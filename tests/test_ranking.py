@@ -2,6 +2,7 @@
 (FIXTURES.md §A3) plus parity property tests (SURVEY §5)."""
 
 import math
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,6 +16,7 @@ from bigdata_hits_spark.operators.ranking import (
     hits_topic_exclusive,
     list_topics,
     pagerank,
+    personalized_pagerank,
     salsa,
     salsa_simplified,
 )
@@ -130,21 +132,74 @@ def test_topic_specific_hits_micrograph(spark, g):
     assert_close(scores_dict(res.auths), ea)
 
 
-def test_shuffle_score_join_matches_broadcast(spark, g, monkeypatch):
-    """Both power-step modes compute identical scores (the shuffle mode is
-    the >SCORE_BROADCAST_MAX_NODES scale path; lowering the threshold to
-    0 sends the micrograph down it)."""
+def test_shuffle_score_join_matches_broadcast(spark, g, on_every_tier):
+    """All three tiers compute identical scores: the micrograph ranks on
+    the driver by default, lowering LOCAL_MAX_EDGES sends it down the
+    broadcast power step, and lowering SCORE_BROADCAST_MAX_NODES to 0
+    down the shuffle step (the >SCORE_BROADCAST_MAX_NODES scale path)."""
     runs = [
         lambda: hits(g, k=3),
         lambda: hits(g, k=3, teleport="topic", topic="y", beta=0.8),
         lambda: salsa(g, k=3),
     ]
-    broadcast = [run() for run in runs]
-    monkeypatch.setattr(ranking, "SCORE_BROADCAST_MAX_NODES", 0)
-    for run, b in zip(runs, broadcast):
-        s = run()
-        assert_close(scores_dict(s.hubs), scores_dict(b.hubs))
-        assert_close(scores_dict(s.auths), scores_dict(b.auths))
+    for run in runs:
+        out = on_every_tier(run)
+        for tier in ("broadcast", "shuffle"):
+            assert_close(scores_dict(out[tier].hubs), scores_dict(out["local"].hubs))
+            assert_close(scores_dict(out[tier].auths), scores_dict(out["local"].auths))
+
+
+def _random_graph(spark):
+    """Seeded graph with every input the tiers must agree on: edge
+    endpoints absent from the node table, duplicate edges, a source
+    (n0) whose out-weights sum to 0, a sink, unlabeled nodes."""
+    rng = random.Random(11)
+    ids = [f"n{i}" for i in range(120)]
+    ends = ids + [f"ghost{i}" for i in range(6)]
+    edges = [(rng.choice(ends), rng.choice(ends), rng.uniform(0.1, 3.0)) for _ in range(700)]
+    edges += edges[:40]
+    edges = [(s, d, 0.0 if s == "n0" else w) for s, d, w in edges if s != "n1"]
+    edges.append(("n0", "n1", 0.0))
+    nodes = [(v, rng.choice(["t0", "t1", None])) for v in ids]
+    return Graph(
+        nodes=spark.createDataFrame(nodes, "id string, labels string"),
+        edges=spark.createDataFrame(edges, "src string, dst string, w double"),
+    )
+
+
+#: The ``tol`` runs stop well before k=40 on this graph.
+TIER_RUNS = {
+    "hits_weighted": lambda g: hits(g, k=6, weight="w"),
+    "hits_topic_tol": lambda g: hits(g, k=40, teleport="topic", topic="t0", beta=0.8, tol=1e-5),
+    "salsa_uniform_tol": lambda g: salsa(g, k=40, teleport="uniform", beta=0.8, tol=1e-5),
+    "salsa_topic": lambda g: salsa(g, k=5, teleport="topic", topic="t1", beta=0.8),
+    "salsa_simplified_weighted": lambda g: salsa_simplified(g, weight="w"),
+    "pagerank_weighted_tol": lambda g: pagerank(g, k=40, weight="w", tol=1e-6),
+    "personalized_pagerank_weighted": lambda g: personalized_pagerank(g, "t0", k=6, weight="w"),
+}
+
+
+@pytest.mark.parametrize("name", list(TIER_RUNS))
+def test_tiers_agree_on_random_graph(spark, on_every_tier, name):
+    """Every ranking computes the same ids, scores (to 1e-9) and
+    iteration counts on the local, broadcast and shuffle tiers."""
+    g = _random_graph(spark)
+    try:
+        assert ranking._nodes_and_mode(g, "w")[1] == "local"
+        out = on_every_tier(lambda: TIER_RUNS[name](g))
+        results = {t: r if isinstance(r, RankResult) else RankResult(hubs=r, auths=r)
+                   for t, r in out.items()}
+        want = results["local"]
+        assert scores_dict(want.auths)
+        if name.endswith("_tol") and want.iterations is not None:
+            assert want.iterations < 40
+        for tier in ("broadcast", "shuffle"):
+            got = results[tier]
+            assert got.iterations == want.iterations, tier
+            assert_close(scores_dict(got.hubs), scores_dict(want.hubs), tol=1e-9)
+            assert_close(scores_dict(got.auths), scores_dict(want.auths), tol=1e-9)
+    finally:
+        g.release()
 
 
 def _pagerank_python(nodes, edges, k, beta):
