@@ -107,31 +107,18 @@ def _dlit(x: float) -> str:
     return repr(x) + "D"
 
 
-def _vec_lit(values: list[float]) -> Column:
-    """Literal double array built as ONE parsed SQL expression.  The
-    idiomatic ``F.array(*[F.lit(x) ...])`` costs a py4j round trip per
-    element — at k*dim elements that is SECONDS of driver time per
-    expression build (measured 1.35 s vs 5 ms for 36x64), repaid on
-    every seeding round and every Lloyd iteration.  The parsed literal
-    is bit-identical (asserted in tests)."""
-    return F.expr("array(" + ",".join(_dlit(x) for x in values) + ")")
-
-
 def _mat_lit(rows: list[list[float]]) -> Column:
-    """Literal array-of-double-arrays via one parsed SQL expression —
-    see ``_vec_lit`` for why not array-of-lits."""
+    """Literal array-of-double-arrays built as ONE parsed SQL expression.
+    The idiomatic nested ``F.array(*[F.lit(x) ...])`` costs a py4j round
+    trip per element — at k*dim elements that is SECONDS of driver time
+    per expression build (measured 1.35 s vs 5 ms for 36x64), repaid on
+    every seeding round and every Lloyd iteration.  The parsed literal
+    is bit-identical."""
     return F.expr(
         "array("
         + ",".join("array(" + ",".join(_dlit(x) for x in row) + ")" for row in rows)
         + ")"
     )
-
-
-def _sq_dist(vec: Column, centroid: list[float], digits: int) -> Column:
-    """Rounded squared-L2 distance to a LITERAL centroid — a sequential
-    left-to-right fold, so the accumulation order is deterministic."""
-    sq = F.zip_with(vec, _vec_lit(centroid), lambda a, b: (a - b) * (a - b))
-    return F.round(F.aggregate(sq, F.lit(0.0), lambda acc, x: acc + x), digits)
 
 
 def _choice(vec: Column, centroids: dict[int, list[float]], digits: int) -> Column:

@@ -106,36 +106,15 @@ def word_shingles(text: Column, k: int = SHINGLE_K) -> Column:
     return _shingles_udf(k)(text)
 
 
-def shingle_set(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, shingle) with per-document distinct shingles.  The shingler
-    is the family's expensive per-row map, so a small single-row-group
-    scan is spread across the session's cores first (projected to the
-    two live columns before the exchange; no-op on real multi-split
-    inputs — sources/readers.py spread_small_scan)."""
-    from bigdata_hits_spark.sources.readers import spread_small_scan
-
-    docs = spread_small_scan(
-        docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t")), "id"
-    )
-    return docs.select(
-        "id",
-        F.explode(word_shingles(F.col("__t"))).alias("shingle"),
-    )
-
-
 def shingle_arrays(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, shs, n): per-document distinct shingle array + its size.
-    No re-explosion — the verify-side counterpart of
-    :func:`shingle_set`; the same small-scan spread applies (the
-    shingler dominates, not the exchange)."""
-    from bigdata_hits_spark.sources.readers import spread_small_scan
-
-    docs = spread_small_scan(
-        docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t")), "id"
-    )
+    """(id, shs, n): per-document distinct shingle array + its size — the
+    family's one shingle relation.  Signatures and postings explode
+    ``shs``; the exact verify reads the arrays as they are.  Callers that
+    consume it more than once pin it, so the shingler runs once per
+    document per call."""
     return docs.select(
-        "id",
-        word_shingles(F.col("__t")).alias("shs"),
+        F.col(id_col).alias("id"),
+        word_shingles(F.col(text_col)).alias("shs"),
     ).withColumn("n", F.size("shs"))
 
 
@@ -149,13 +128,12 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     )
 
 
-def minhash_signatures(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, h0..h15): minimum of (a_j·x + b_j) mod P over the document's
-    shingle hashes.  All 16 mins ride one aggregation — a single shuffle,
-    no 16× row blowup."""
-    sh = shingle_set(docs, id_col, text_col)
+def _signatures(shs: DataFrame) -> DataFrame:
+    """(id, h0..h15) from a :func:`shingle_arrays` relation: minimum of
+    (a_j·x + b_j) mod P over the document's shingle hashes.  All 16 mins
+    ride one aggregation — a single shuffle, no 16× row blowup."""
     x = token_hash(F.col("shingle")) % F.lit(MINHASH_P)
-    hashed = sh.select(
+    hashed = shs.select("id", F.explode("shs").alias("shingle")).select(
         "id",
         *[
             ((F.lit(a) * x + F.lit(b)) % F.lit(MINHASH_P)).alias(f"h{j}")
@@ -167,8 +145,15 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id", text_col: str = 
     )
 
 
-def _band_rows(signatures: DataFrame) -> DataFrame:
-    """(id, band_id, sig): banded signature strings 'v,v,v,v'."""
+def minhash_signatures(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """(id, h0..h15): the MinHash signature of every document with at
+    least one shingle."""
+    return _signatures(shingle_arrays(docs, id_col, text_col))
+
+
+def band_rows(signatures: DataFrame) -> DataFrame:
+    """(id, band_id, sig): banded signature strings 'v,v,v,v' — the join
+    key layout for both self- and cross-corpus candidate generation."""
     bands = [
         F.struct(
             F.lit(b).alias("band_id"),
@@ -223,13 +208,19 @@ def minhash_near_duplicates(
     (one count per bucket, map-side combined) and bounds the self-join
     output at ``max_bucket**2 / 2`` rows per bucket at ANY corpus
     scale."""
+    # The shingles feed the signatures AND the verify: pin them once
+    # (lazy localCheckpoint) so the shingler runs once per document.
+    shs = shingle_arrays(docs, id_col, text_col).localCheckpoint(eager=False)
+    return _near_duplicates(shs, threshold, max_bucket)
+
+
+def _near_duplicates(shs: DataFrame, threshold: float, max_bucket: int) -> DataFrame:
+    """:func:`minhash_near_duplicates` over a pinned shingle relation."""
     # bands is consumed by the bucket count AND the semi-join, and the
     # surviving rows by both sides of the self-join: pin each once
     # (lazy localCheckpoint — signature-sized, BANDS rows per doc) so
     # the signature aggregation never recomputes per reference.
-    bands = _band_rows(minhash_signatures(docs, id_col, text_col)).localCheckpoint(
-        eager=False
-    )
+    bands = band_rows(_signatures(shs)).localCheckpoint(eager=False)
     bucket_n = bands.groupBy("band_id", "sig").agg(
         F.count(F.lit(1)).alias("bucket_n")
     )
@@ -246,7 +237,7 @@ def minhash_near_duplicates(
         .select("id1", "id2")
         .distinct()
     )
-    return _jaccard_verify(candidates, shingle_arrays(docs, id_col, text_col), threshold)
+    return _jaccard_verify(candidates, shs, threshold)
 
 
 def simhash_signatures(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -341,7 +332,8 @@ def ngram_jaccard_pairs(
     the shingler/verify dominate; the byte win is per-posting-row, which
     is exactly what grows by 10^6 on a 100 TB corpus.)
     """
-    sh = shingle_set(docs, id_col, text_col)
+    shs = shingle_arrays(docs, id_col, text_col).localCheckpoint(eager=False)
+    sh = shs.select("id", F.explode("shs").alias("shingle"))
     # df per TRUE shingle (exact cap); map-side combine reduces the
     # exchange to distinct-shingle volume before the strings shuffle.
     df_counts = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
@@ -364,23 +356,20 @@ def ngram_jaccard_pairs(
         .filter(F.col("shared") >= min_shared)
         .select("id1", "id2")
     )
-    return _jaccard_verify(candidates, shingle_arrays(docs, id_col, text_col), threshold)
+    return _jaccard_verify(candidates, shs, threshold)
 
 
-def band_rows(signatures: DataFrame) -> DataFrame:
-    """Public banding: (id, band_id, sig) rows from a signature table —
-    the join key layout for both self- and cross-corpus candidate
-    generation."""
-    return _band_rows(signatures)
-
-
-def signature_jaccard_estimate(cand: DataFrame, s1: DataFrame, s2: DataFrame) -> DataFrame:
-    """(id1, id2, est_jaccard): MinHash estimate — the fraction of equal
-    signature components — for candidate pairs, attaching each side by an
-    id equi-join.  The standard store-only-signatures regime: bodies of
-    the historical corpus are NEVER read again, so the estimate (1/16
-    granularity at NUM_HASHES=16) replaces exact verification for
-    new-vs-old pairs."""
+def signature_jaccard_estimate(s1: DataFrame, s2: DataFrame) -> DataFrame:
+    """(id1, id2, est_jaccard) for every pair of an ``s1`` and an ``s2``
+    signature that share a band: banded cross-join for candidates, then
+    the MinHash estimate — the fraction of equal signature components —
+    attaching each side by an id equi-join.  The standard
+    store-only-signatures regime: bodies of the historical corpus are
+    NEVER read again, so the estimate (1/16 granularity at
+    NUM_HASHES=16) replaces exact verification for new-vs-old pairs."""
+    b1 = band_rows(s1).select(F.col("id").alias("id1"), "band_id", "sig")
+    b2 = band_rows(s2).select(F.col("id").alias("id2"), "band_id", "sig")
+    cand = b1.join(b2, ["band_id", "sig"]).select("id1", "id2").distinct()
     a = s1.select(F.col("id").alias("id1"), *[F.col(f"h{j}").alias(f"a{j}") for j in range(NUM_HASHES)])
     b = s2.select(F.col("id").alias("id2"), *[F.col(f"h{j}").alias(f"b{j}") for j in range(NUM_HASHES)])
     matches = sum(
@@ -420,21 +409,18 @@ def minhash_dedup_incremental(
     threshold is the nearest achievable fraction; near-exact duplicates
     (est = 1.0) are always caught.
     """
-    new_sigs = minhash_signatures(new_docs, id_col, text_col)
-
-    # Stage 1: exact dedup within the new batch.
-    intra_pairs = minhash_near_duplicates(
-        new_docs, threshold, id_col=id_col, text_col=text_col
-    )
     from bigdata_hits_spark.operators.components import dedup_survivors
 
+    # The new batch is shingled once, for its signatures and stage 1.
+    shs = shingle_arrays(new_docs, id_col, text_col).localCheckpoint(eager=False)
+    new_sigs = _signatures(shs)
+
+    # Stage 1: exact dedup within the new batch.
+    intra_pairs = _near_duplicates(shs, threshold, MINHASH_MAX_BUCKET)
     intra = dedup_survivors(new_docs, intra_pairs, id_col)
 
     # Stage 2: estimated dedup against the historical signatures.
-    nb = band_rows(new_sigs).select(F.col("id").alias("id1"), "band_id", "sig")
-    ob = band_rows(corpus_signatures).select(F.col("id").alias("id2"), "band_id", "sig")
-    cross_cand = nb.join(ob, ["band_id", "sig"]).select("id1", "id2").distinct()
-    est = signature_jaccard_estimate(cross_cand, new_sigs, corpus_signatures)
+    est = signature_jaccard_estimate(new_sigs, corpus_signatures)
     dup_of_old = (
         est.filter(F.col("est_jaccard") >= threshold)
         .select(F.col("id1").alias(id_col))
@@ -788,7 +774,13 @@ def duplicated_ngram_profile(
     across engines."""
     from bigdata_hits_spark.functions.text import token_hash
 
-    sh = shingle_set(docs, id_col, text_col)
+    # The postings feed the df count AND the join back: pin the shingles
+    # once so the shingler runs once per document.
+    sh = (
+        shingle_arrays(docs, id_col, text_col)
+        .localCheckpoint(eager=False)
+        .select("id", F.explode("shs").alias("shingle"))
+    )
     tok = sh.select("id", token_hash(F.col("shingle")).alias("__h"))
     dfc = tok.groupBy("__h").agg(F.count(F.lit(1)).alias("__df"))
     per = (

@@ -165,12 +165,7 @@ def q_dedup_minhash_incremental(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     new = docs.filter(F.col("doc_id") % 2 == 1)
     old = docs.filter(F.col("doc_id") % 2 == 0)
-    new_sigs = DD.minhash_signatures(new)
-    old_sigs = DD.minhash_signatures(old)
-    nb = DD.band_rows(new_sigs).select(F.col("id").alias("id1"), "band_id", "sig")
-    ob = DD.band_rows(old_sigs).select(F.col("id").alias("id2"), "band_id", "sig")
-    cand = nb.join(ob, ["band_id", "sig"]).select("id1", "id2").distinct()
-    return DD.signature_jaccard_estimate(cand, new_sigs, old_sigs)
+    return DD.signature_jaccard_estimate(DD.minhash_signatures(new), DD.minhash_signatures(old))
 
 
 CHUNK_MAX = 32

@@ -10,6 +10,7 @@ Usage: python scripts/profile_query.py <name> [<name> ...] [--passes N]
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
@@ -20,23 +21,24 @@ from bigdata_hits_spark import queries as q
 from bigdata_hits_spark.session import get_spark
 
 
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(description="Wall time and Spark jobs per pass of declared queries.")
+    ap.add_argument("names", nargs="+", help="declared query names")
+    ap.add_argument("--passes", type=int, default=3, help="passes per query (default 3)")
+    return ap.parse_intermixed_args(argv)
+
+
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    passes = 3
-    if "--passes" in sys.argv:
-        passes = int(sys.argv[sys.argv.index("--passes") + 1])
+    args = parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.environ.setdefault("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     spark = get_spark("profile-query")
     spark.sparkContext.setLogLevel("ERROR")
     registry = q.queries()
-    if not args:
-        print("usage: profile_query.py <name> [...]", file=sys.stderr)
-        sys.exit(2)
     tracker = spark.sparkContext.statusTracker()
-    for name in args:
+    for name in args.names:
         fn = registry[name]
-        for p in range(passes):
+        for p in range(args.passes):
             jobs_before = set(tracker.getJobIdsForGroup(None) or [])
             spark.sparkContext.setJobDescription(f"{name} pass {p}")
             t0 = time.time()
@@ -45,7 +47,7 @@ def main() -> None:
             jobs_after = set(tracker.getJobIdsForGroup(None) or [])
             new_jobs = sorted(jobs_after - jobs_before)
             print(f"== {name} pass {p}: {wall:.3f}s, {len(new_jobs)} jobs")
-            if p == passes - 1:
+            if p == args.passes - 1:
                 for j in new_jobs:
                     info = tracker.getJobInfo(j)
                     if info is None:

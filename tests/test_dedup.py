@@ -23,8 +23,10 @@ def test_exact_duplicates(spark, docs):
 
 
 def test_shingles_short_doc_empty(spark, docs):
-    sh = DD.shingle_set(docs)
-    assert sh.filter(F.col("id") == 5).count() == 0
+    sh = DD.shingle_arrays(docs)
+    assert sh.filter(F.col("id") == 5).select("n").collect()[0]["n"] == 0
+    exploded = sh.select("id", F.explode("shs").alias("shingle"))
+    assert exploded.filter(F.col("id") == 5).count() == 0
 
 
 def test_minhash_exact_dup_scores_one(spark, docs):

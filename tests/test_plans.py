@@ -593,6 +593,23 @@ _RANKING_JOBS_PER_ITER = {
 }
 
 
+def _jobs(spark, action) -> int:
+    """Spark jobs fired while ``action()`` runs (build and action alike)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store is fed asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_ranking_jobs_per_iteration(spark, monkeypatch, tmp_path):
     """(jobs at k=6 - jobs at k=3) / 3 on a warm graph, with every
     output collected, on all three tiers: no ranking loop pays more jobs
@@ -600,7 +617,6 @@ def test_ranking_jobs_per_iteration(spark, monkeypatch, tmp_path):
     PageRank — one loop — pay the same.  A local-tier score vector is
     one partition, so writing it as a score file is exactly one job."""
     import random
-    import uuid
 
     from bigdata_hits_spark.operators import ranking
     from bigdata_hits_spark.operators.graph import Graph
@@ -624,19 +640,6 @@ def test_ranking_jobs_per_iteration(spark, monkeypatch, tmp_path):
         "pagerank": lambda g, k: ranking.pagerank(g, k),
         "personalized_pagerank": lambda g, k: ranking.personalized_pagerank(g, "t0", k),
     }
-    sc = spark.sparkContext
-
-    def jobs(action):
-        group = f"ranking-jobs-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            action()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        # the status store is fed asynchronously
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
 
     def ranked(run, g, k):
         out = run(g, k)
@@ -653,8 +656,10 @@ def test_ranking_jobs_per_iteration(spark, monkeypatch, tmp_path):
         try:
             per_iter = {}
             for name, run in runs.items():
-                jobs(lambda: ranked(run, g, 1))  # warm: prepared edges, counts, topic state
-                k6, k3 = jobs(lambda: ranked(run, g, 6)), jobs(lambda: ranked(run, g, 3))
+                # warm: prepared edges, counts, topic state
+                _jobs(spark, lambda: ranked(run, g, 1))
+                k6 = _jobs(spark, lambda: ranked(run, g, 6))
+                k3 = _jobs(spark, lambda: ranked(run, g, 3))
                 per_iter[name] = (k6 - k3) / 3
                 if per_iter[name] > ceilings[name]:
                     failures.append(f"{mode} {name}: {per_iter[name]} > {ceilings[name]}")
@@ -662,9 +667,30 @@ def test_ranking_jobs_per_iteration(spark, monkeypatch, tmp_path):
                 failures.append(f"{mode}: pagerank/ppr differ: {per_iter}")
             if mode == "local":
                 hubs = ranking.hits(g, 3).hubs
-                n_write = jobs(lambda: write_scores_text(hubs, str(tmp_path / "hubs")))
+                n_write = _jobs(spark, lambda: write_scores_text(hubs, str(tmp_path / "hubs")))
                 if n_write != 1:
                     failures.append(f"local write_scores_text: {n_write} jobs, expected 1")
         finally:
             g.release()
     assert not failures, "\n".join(failures)
+
+
+#: Jobs for one ``minhash_near_duplicates(...).count()`` on a
+#: one-row-group parquet scan, built and counted, on the plain scan and
+#: behind the exact-dedup semi-join ``clean_corpus`` feeds it.
+_MINHASH_JOBS = {"scan": 8, "exact_dedup": 10}
+
+
+def test_minhash_near_duplicates_job_count(spark, sf_dir_oracle):
+    """The shingle relation is pinned once and read by the signatures
+    and the verify; no scan probe or second shingle pass adds jobs."""
+    from bigdata_hits_spark.operators.dedup import exact_duplicates, minhash_near_duplicates
+
+    docs = load_table(spark, sf_dir_oracle, "documents")
+    keep = exact_duplicates(docs).select(F.col("keep_id").alias("doc_id"))
+    inputs = {"scan": docs, "exact_dedup": docs.join(keep, "doc_id", "left_semi")}
+    counts = {
+        name: _jobs(spark, lambda: minhash_near_duplicates(d).count())
+        for name, d in inputs.items()
+    }
+    assert all(counts[k] <= _MINHASH_JOBS[k] for k in counts), (counts, _MINHASH_JOBS)

@@ -18,9 +18,25 @@ def test_scripts_found():
     assert _SCRIPTS
 
 
-@pytest.mark.parametrize("path", _SCRIPTS, ids=os.path.basename)
-def test_script_imports(path):
+def _load(path):
     name = "scripts_" + os.path.splitext(os.path.basename(path))[0]
     spec = importlib.util.spec_from_file_location(name, path)
     module = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(module)
+    return module
+
+
+@pytest.mark.parametrize("path", _SCRIPTS, ids=os.path.basename)
+def test_script_imports(path):
+    _load(path)
+
+
+def test_profile_query_parses_passes_value():
+    """``--passes N`` takes N as its value, not as a query name."""
+    module = _load(next(p for p in _SCRIPTS if os.path.basename(p) == "profile_query.py"))
+    args = module.parse_args(["dedup_minhash_lsh", "--passes", "2", "clean_corpus_docs"])
+    assert args.names == ["dedup_minhash_lsh", "clean_corpus_docs"]
+    assert args.passes == 2
+    assert module.parse_args(["dedup_minhash_lsh"]).passes == 3
+    with pytest.raises(SystemExit):
+        module.parse_args(["--passes", "2"])
