@@ -17,6 +17,14 @@ lineage cut, the per-round measure and stop test, and the round budget.
 Rounds needed ≈ graph diameter; dedup-cluster graphs (LSH buckets ∪
 verified pairs) have tiny diameters, so 3-5 rounds close them.
 
+Small inputs skip Spark's per-round jobs entirely: a pair list of at
+most ``ranking.LOCAL_MAX_EDGES`` rows is pinned, collected to the driver
+once and labeled by the same rounds in numpy
+(:mod:`~bigdata_hits_spark.operators.localgraph`), and the labels come
+back as a one-partition frame — one collect and one write job per call.
+Larger inputs, and ids that are null or of mixed or non-integer,
+non-string types, run the Spark rounds below on the pinned input.
+
 At 1000-executor scale the per-round cost is one shuffle of (node,
 label) pairs — compact longs/strings, never document bodies.  For
 adversarial long-diameter graphs (chains, lattices — not a dedup shape)
@@ -30,8 +38,10 @@ from __future__ import annotations
 
 from functools import partial
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from bigdata_hits_spark.operators import localgraph
 from bigdata_hits_spark.plans.iterate import fixpoint, materialize
 
 
@@ -51,7 +61,17 @@ def connected_components(
     that case — a slow-path success instead of a runtime error.  Pass
     ``escalate=False`` to raise instead (e.g. to surface an unexpectedly
     long-diameter pair graph in a pipeline that should never see one).
+
+    At most ``ranking.LOCAL_MAX_EDGES`` pairs run on the driver: the same
+    min-label rounds in numpy, counted against the same ``max_iter``
+    (``escalate=False`` raises the same error); past the budget the
+    driver keeps going with pointer jumping instead of star
+    contraction — the labels are the same.
     """
+    pairs, local = localgraph.pinned_pairs(pairs, id1, id2)
+    if local is not None:
+        comp = localgraph.min_label_components(local, max_iter, escalate)
+        return local.frame(id=np.arange(len(comp)), component=comp)
     # Symmetrize once: (src, dst) in both directions. Self-pairs are
     # harmless (min with itself) and dropped by distinct anyway.
     fwd = pairs.select(F.col(id1).alias("src"), F.col(id2).alias("dst"))
@@ -307,7 +327,15 @@ def strongly_connected_components(
     at a round that changed no row), so every phase terminates, in as
     many rounds as the graph is deep.  At 1000-executor scale each
     round is one hash exchange of the label frame, keyed on node id.
+
+    At most ``ranking.LOCAL_MAX_EDGES`` edges run the same four phases
+    on the driver, as numpy rounds over edge arrays (same outer-round
+    guard), and return a one-partition frame.
     """
+    edges, local = localgraph.pinned_pairs(edges, src, dst)
+    if local is not None:
+        scc = localgraph.strong_components(local, _SCC_MAX_OUTER)
+        return local.frame(id=np.arange(len(scc)), scc=scc)
     e = materialize(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     )

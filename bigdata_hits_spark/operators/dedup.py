@@ -588,13 +588,7 @@ def remove_repeated_spans(
     """
     if n <= 0:
         raise ValueError("n must be positive")
-    from bigdata_hits_spark.sources.readers import spread_small_scan
-
-    # The per-position md5-window fan-out below is the heavy per-row
-    # map; spread a single-row-group scan first (no-op at scale; r13).
-    docs = spread_small_scan(
-        docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t")), "id"
-    )
+    docs = docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))
     toks = docs.select(
         "id",
         F.split(F.coalesce(F.col("__t"), F.lit("")), " ").alias("tk"),

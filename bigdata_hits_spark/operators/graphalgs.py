@@ -25,12 +25,18 @@ Scale notes:
   fixed cadence — k rounds, no convergence test.
 - k-core and k-truss peel to a fixpoint on
   :func:`~bigdata_hits_spark.plans.iterate.fixpoint`.
+- Label propagation and k-core on at most ``ranking.LOCAL_MAX_EDGES``
+  input rows (the edges, or ``sym`` as passed) run on the driver: one
+  collect of the pinned input, numpy rounds with the same semantics
+  (:mod:`~bigdata_hits_spark.operators.localgraph`), a one-partition
+  result.  Larger inputs run the Spark rounds on the pinned input.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from bigdata_hits_spark.operators import localgraph
 from bigdata_hits_spark.plans.iterate import fixpoint, materialize
 
 #: Label-propagation rounds between lineage truncations (see loop note).
@@ -45,6 +51,17 @@ def symmetric_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     fwd = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     rev = edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
     return fwd.unionByName(rev).filter(F.col("a") != F.col("b")).distinct()
+
+
+def _pinned_sym(edges: DataFrame, src: str, dst: str, sym: DataFrame | None):
+    """``(edges, sym, local)`` for the loops below: the input they read —
+    ``sym`` as passed, else the ``(src, dst)`` edges — pinned, and its
+    symmetric relation on the driver when it fits the local tier."""
+    if sym is not None:
+        sym, local = localgraph.pinned_pairs(sym, "a", "b")
+        return edges, sym, local
+    edges, local = localgraph.pinned_pairs(edges, src, dst)
+    return edges, None, None if local is None else local.symmetric()
 
 
 def _oriented(sym: DataFrame) -> DataFrame:
@@ -318,7 +335,16 @@ def label_propagation(
     on the bijection, whose min-of-mode picks exactly the rank of the
     string-min label; results are identical by construction (equality
     asserted in tests).  Below the threshold the one-time encode joins
-    outweigh the per-round savings (measurements above)."""
+    outweigh the per-round savings (measurements above).
+
+    All of this is the Spark tier.  An input of at most
+    ``ranking.LOCAL_MAX_EDGES`` rows runs the same rounds on the driver
+    — a ``(node, label)`` count, then min-of-mode, on sorted int codes —
+    and returns a one-partition frame."""
+    edges, sym, local = _pinned_sym(edges, src, dst, sym)
+    if local is not None:
+        ids, labels = localgraph.label_propagation(local, k)
+        return local.frame(id=ids, community=labels)
     # Pre-partition the (large) symmetric edge set on the join key ONCE;
     # localCheckpoint pins the partitioning, so each round's equi-join
     # exchanges only the (node-sized) label vector — the same
@@ -413,7 +439,14 @@ def k_core(
     that DOUBLES the number of lazy peels folded into each round.  Progress per action then grows
     geometrically and any peeling depth D completes in
     O(max_iter + log D) actions instead of raising.
+
+    An input of at most ``ranking.LOCAL_MAX_EDGES`` rows peels on the
+    driver instead: simultaneous ``bincount`` degree rounds to the same
+    fixpoint (no round budget needed), one-partition result.
     """
+    edges, sym, local = _pinned_sym(edges, src, dst, sym)
+    if local is not None:
+        return local.frame(id=localgraph.k_core(local, k))
     if sym is None:
         sym = materialize(symmetric_edges(edges, src, dst))
 

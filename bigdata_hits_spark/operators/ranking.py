@@ -60,6 +60,7 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from bigdata_hits_spark.operators.graph import Graph, neighborhood, topic_induced
+from bigdata_hits_spark.operators.localgraph import collect_bounded, encode_ids, frame
 from bigdata_hits_spark.plans.iterate import materialize, normalized
 
 
@@ -267,40 +268,39 @@ def _collect_local(graph: Graph, cap: int) -> _LocalGraph | None:
     """One Arrow collect of ``src, dst`` plus every numeric edge column
     (cast to double, as the Spark tiers cast a weight), one of the node
     ``id, label``, each limited to ``cap + 1`` rows so a graph above the
-    cap costs one bounded read.  Graphs with null or duplicate node ids,
-    or ids of mixed types, stay on Spark."""
+    cap costs one bounded read.  Ids are encoded by
+    :func:`~bigdata_hits_spark.operators.localgraph.encode_ids`; graphs
+    with duplicate node ids, or ids it refuses (null, mixed types,
+    neither integer nor string), stay on Spark."""
     numeric = [
         f.name for f in graph.edges.schema.fields
         if f.name not in ("src", "dst") and isinstance(f.dataType, T.NumericType)
     ]
-    et = (
-        graph.edges.select("src", "dst", *[F.col(c).cast("double").alias(c) for c in numeric])
-        .limit(cap + 1)
-        .toArrow()
+    et = collect_bounded(
+        graph.edges.select("src", "dst", *[F.col(c).cast("double").alias(c) for c in numeric]),
+        cap,
     )
-    if et.num_rows > cap:
+    if et is None:
         return None
     label = F.col(graph.label_col) if graph.label_col in graph.nodes.columns else F.lit(None)
-    nt = graph.nodes.select("id", label.cast("string").alias("label")).limit(cap + 1).toArrow()
-    if nt.num_rows > cap:
+    nt = collect_bounded(graph.nodes.select("id", label.cast("string").alias("label")), cap)
+    if nt is None:
         return None
-    cols = [nt["id"], et["src"], et["dst"]]
-    if len({c.type for c in cols}) > 1 or any(c.null_count for c in cols):
+    enc = encode_ids([nt["id"], et["src"], et["dst"]])
+    if enc is None:
         return None
-    enc = pa.concat_arrays([c.combine_chunks() for c in cols]).dictionary_encode()
-    codes = enc.indices.to_numpy()
-    n, m = nt.num_rows, et.num_rows
-    node = np.zeros(len(enc.dictionary), dtype=bool)
-    node[codes[:n]] = True
-    if int(node.sum()) != n:
+    ids, (node_codes, src, dst) = enc
+    node = np.zeros(len(ids), dtype=bool)
+    node[node_codes] = True
+    if int(node.sum()) != nt.num_rows:
         return None
     return _LocalGraph(
-        ids=enc.dictionary,
+        ids=ids,
         node=node,
-        node_codes=codes[:n],
+        node_codes=node_codes,
         labels=nt["label"],
-        src=codes[n:n + m],
-        dst=codes[n + m:],
+        src=src,
+        dst=dst,
         weights={c: et[c].to_numpy() for c in numeric if et[c].null_count == 0},
     )
 
@@ -401,7 +401,7 @@ class _LocalTier:
         and writing it as one file plan no exchange."""
         idx = np.flatnonzero(v.mask)
         table = pa.table({"id": self.lg.ids.take(pa.array(idx)), "score": v.val[idx]})
-        return _sorted(self.spark.createDataFrame(table).coalesce(1))
+        return _sorted(frame(self.spark, table))
 
 
 # ---------------------------------------------------------------------------

@@ -22,9 +22,11 @@ the measure's own job, and :func:`fixpoint` measures every round.
 Fixed-k loops (HITS/SALSA and the PageRank family, label propagation,
 BFS, feature propagation) have no convergence test and keep their own
 cadence.  The ranking ones end every iteration in :func:`normalized` on
-the broadcast and shuffle tiers; a graph of at most
-``ranking.LOCAL_MAX_EDGES`` edges ranks on the driver in numpy and runs
-no Spark job per iteration at all.
+the broadcast and shuffle tiers.  A graph of at most
+``ranking.LOCAL_MAX_EDGES`` edges runs none of this: ranking, connected
+components, SCC, label propagation and k-core iterate on the driver in
+numpy (operators/ranking.py, operators/localgraph.py) with no Spark job
+per round at all.
 """
 
 from __future__ import annotations

@@ -33,9 +33,13 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
 
     from bigdata_hits_spark import queries as q
+    from bigdata_hits_spark.operators import ranking
     from bigdata_hits_spark.plans.audit import count_shuffles
     from bigdata_hits_spark.session import get_spark
 
+    # Record the Spark-tier plans, as tests/test_plans.py holds them: at
+    # the default cap the graph rows run on the driver and plan nothing.
+    ranking.LOCAL_MAX_EDGES = -1
     spark = get_spark("gen-shuffle-budget")
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -694,3 +694,43 @@ def test_minhash_near_duplicates_job_count(spark, sf_dir_oracle):
         for name, d in inputs.items()
     }
     assert all(counts[k] <= _MINHASH_JOBS[k] for k in counts), (counts, _MINHASH_JOBS)
+
+
+#: Jobs for one graph loop plus the parquet write of its result, on a
+#: graph read from parquet below LOCAL_MAX_EDGES: the bounded collect
+#: and the write.
+_LOCAL_LOOP_JOBS = 2
+
+
+def test_graph_loops_local_tier_jobs(spark, monkeypatch, tmp_path):
+    """Connected components, SCC, label propagation and k-core on a
+    small graph are one collect and one write; with the cap at -1 the
+    same calls run the Spark loops, which cost more jobs than that."""
+    import random
+
+    from bigdata_hits_spark.operators import ranking
+    from bigdata_hits_spark.operators.components import (
+        connected_components,
+        strongly_connected_components,
+    )
+    from bigdata_hits_spark.operators.graphalgs import k_core, label_propagation
+
+    rng = random.Random(3)
+    pairs = sorted({(f"v{rng.randrange(60)}", f"v{rng.randrange(60)}") for _ in range(150)})
+    spark.createDataFrame(pairs, "src string, dst string").write.parquet(str(tmp_path / "e"))
+    edges = spark.read.parquet(str(tmp_path / "e"))
+    loops = {
+        "connected_components": lambda: connected_components(edges, "src", "dst"),
+        "strongly_connected_components": lambda: strongly_connected_components(edges),
+        "label_propagation": lambda: label_propagation(edges, k=5),
+        "k_core": lambda: k_core(edges, 3),
+    }
+    failures = []
+    for cap in (ranking.LOCAL_MAX_EDGES, -1):
+        monkeypatch.setattr(ranking, "LOCAL_MAX_EDGES", cap)
+        for name, loop in loops.items():
+            out = str(tmp_path / f"{name}_{cap}")
+            n = _jobs(spark, lambda: loop().write.parquet(out))
+            if (n > _LOCAL_LOOP_JOBS) != (cap < 0):
+                failures.append(f"cap {cap} {name}: {n} jobs (local ceiling {_LOCAL_LOOP_JOBS})")
+    assert not failures, "\n".join(failures)
