@@ -7,31 +7,33 @@ components — with one survivor elected per cluster.  (Transitivity is
 real: A~B and B~C often without A~C at the threshold, so neither pair
 list nor groupBy can do this alone.)
 
-Algorithm: alternating min-label propagation to convergence.  Each round
-every node adopts the minimum label in its closed neighborhood; rounds
-are DataFrame join+groupBy (shuffle on node id).  Every fixpoint loop in
-this module (min-label, star contraction, the SCC trim/color/mark
-phases) is a round body handed to
-:func:`~bigdata_hits_spark.plans.iterate.fixpoint`, which owns the
-lineage cut, the per-round measure and stop test, and the round budget.
-Rounds needed ≈ graph diameter; dedup-cluster graphs (LSH buckets ∪
-verified pairs) have tiny diameters, so 3-5 rounds close them.
-
-Small inputs skip Spark's per-round jobs entirely: a pair list of at
+:func:`connected_components` is the one entry point.  A pair list of at
 most ``ranking.LOCAL_MAX_EDGES`` rows is pinned, collected to the driver
-once and labeled by the same rounds in numpy
-(:mod:`~bigdata_hits_spark.operators.localgraph`), and the labels come
+once and labeled there (:mod:`~bigdata_hits_spark.operators.localgraph`:
+min-label rounds with pointer jumping, to the fixpoint); the labels come
 back as a one-partition frame — one collect and one write job per call.
 Larger inputs, and ids that are null or of mixed or non-integer,
 non-string types, run the Spark rounds below on the pinned input.
 
-At 1000-executor scale the per-round cost is one shuffle of (node,
-label) pairs — compact longs/strings, never document bodies.  For
-adversarial long-diameter graphs (chains, lattices — not a dedup shape)
-min-label needs ~diameter rounds; :func:`connected_components_star`
-is the O(log n)-round alternating large-star/small-star contraction
-(Kiveris et al., "Connected Components in MapReduce and Beyond") with
-the same (pairs in, labels out) contract.
+The Spark tier starts with min-label propagation: each round every node
+adopts the minimum label in its closed neighborhood, one join+groupBy
+shuffling (node, label) pairs — compact longs/strings, never document
+bodies.  Rounds needed ≈ graph diameter; dedup-cluster graphs (LSH
+buckets ∪ verified pairs) have tiny diameters, so 3-5 rounds close
+them.  A graph that has not converged after ``_MIN_LABEL_ROUNDS`` rounds
+has a long diameter (chains, lattices — not a dedup shape), and the
+Spark tier switches to alternating large-star/small-star contraction
+(Kiveris et al., "Connected Components in MapReduce and Beyond"), which
+needs O(log n) rounds whatever the diameter.  Each wins on its own
+shape (Spark tier, warm call, local[4]): 20,000 dedup-shaped clusters
+of 2-8 nodes took 3.2 s / 23 jobs by min-label vs 3.6 s / 26 jobs by
+star contraction alone; a 61-node chain took 11.5 s / 238 jobs through
+the switch vs 5.0 s / 76 jobs by star contraction alone.
+
+Every fixpoint loop in this module (min-label, star contraction, the
+SCC trim/color/mark phases) is a round body handed to
+:func:`~bigdata_hits_spark.plans.iterate.fixpoint`, which owns the
+lineage cut, the per-round measure and stop test, and the round budget.
 """
 
 from __future__ import annotations
@@ -44,33 +46,30 @@ from pyspark.sql import DataFrame, functions as F
 from bigdata_hits_spark.operators import localgraph
 from bigdata_hits_spark.plans.iterate import fixpoint, materialize
 
+#: Min-label rounds the Spark tier runs before switching to star
+#: contraction: past it the graph's diameter is no dedup shape.
+_MIN_LABEL_ROUNDS = 20
+
+#: Round guard of star contraction, which needs O(log n) rounds.
+_STAR_ROUNDS = 40
+
 
 def connected_components(
     pairs: DataFrame,
     id1: str = "id1",
     id2: str = "id2",
-    max_iter: int = 20,
-    escalate: bool = True,
 ) -> DataFrame:
     """(id, component) for every node appearing in ``pairs``; ``component``
     is the minimum node id in the cluster.
 
-    If ``max_iter`` rounds don't converge (diameter > max_iter — not a
-    dedup-pair shape), falls back to the O(log n)-round
-    :func:`connected_components_star` contraction, which handles exactly
-    that case — a slow-path success instead of a runtime error.  Pass
-    ``escalate=False`` to raise instead (e.g. to surface an unexpectedly
-    long-diameter pair graph in a pipeline that should never see one).
-
-    At most ``ranking.LOCAL_MAX_EDGES`` pairs run on the driver: the same
-    min-label rounds in numpy, counted against the same ``max_iter``
-    (``escalate=False`` raises the same error); past the budget the
-    driver keeps going with pointer jumping instead of star
-    contraction — the labels are the same.
+    At most ``ranking.LOCAL_MAX_EDGES`` pairs are labeled on the driver.
+    Larger inputs run min-label rounds on Spark, switching to star
+    contraction when ``_MIN_LABEL_ROUNDS`` rounds do not converge (see
+    the module docstring).  Both tiers give the same labels.
     """
     pairs, local = localgraph.pinned_pairs(pairs, id1, id2)
     if local is not None:
-        comp = localgraph.min_label_components(local, max_iter, escalate)
+        comp = localgraph.min_label_components(local)
         return local.frame(id=np.arange(len(comp)), component=comp)
     # Symmetrize once: (src, dst) in both directions. Self-pairs are
     # harmless (min with itself) and dropped by distinct anyway.
@@ -100,11 +99,11 @@ def connected_components(
         )
 
     labels, _, converged = fixpoint(
-        labels, relabel, _n_changed, max_rounds=max_iter,
-        name="connected_components", strict=not escalate,
+        labels, relabel, _n_changed, max_rounds=_MIN_LABEL_ROUNDS,
+        name="connected_components", strict=False,
     )
     if not converged:
-        return connected_components_star(pairs, id1, id2)
+        return _star_components(pairs, id1, id2)
     return labels.select("id", "component")
 
 
@@ -125,12 +124,7 @@ def _neighborhood_mins(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    id1: str = "id1",
-    id2: str = "id2",
-    max_iter: int = 40,
-) -> DataFrame:
+def _star_components(pairs: DataFrame, id1: str = "id1", id2: str = "id2") -> DataFrame:
     """(id, component) by alternating large-star/small-star contraction —
     O(log n) rounds regardless of diameter, vs ~diameter rounds for
     :func:`connected_components`'s min-label propagation.
@@ -190,7 +184,7 @@ def connected_components_star(
         return _sym(small)
 
     edges, _, _ = fixpoint(
-        edges, contract, _fingerprint, max_rounds=max_iter, until="stable",
+        edges, contract, _fingerprint, max_rounds=_STAR_ROUNDS, until="stable",
         name="star contraction",
     )
 
@@ -212,26 +206,13 @@ def dedup_survivors(
     id_col: str = "doc_id",
     id1: str = "id1",
     id2: str = "id2",
-    variant: str = "auto",
 ) -> DataFrame:
-    """End-to-end near-dup removal: cluster the duplicate ``pairs``, keep
-    the minimum-id document of each cluster, and pass through every
-    document that appears in no pair.  Returns ``docs`` filtered to
-    survivors (left-anti join on the drop set — documents shuffle only by
-    id, bodies stay put).
-
-    ``variant`` picks the clustering: ``'auto'`` (min-label propagation,
-    escalating to star contraction on non-convergence), ``'minlabel'``
-    (min-label only; raises on long diameters), ``'star'`` (O(log n)
-    contraction directly — for graphs known to be long-diameter)."""
-    if variant == "auto":
-        comp = connected_components(pairs, id1, id2)
-    elif variant == "minlabel":
-        comp = connected_components(pairs, id1, id2, escalate=False)
-    elif variant == "star":
-        comp = connected_components_star(pairs, id1, id2)
-    else:
-        raise ValueError(f"unknown variant: {variant!r} (use 'auto', 'minlabel', or 'star')")
+    """End-to-end near-dup removal: cluster the duplicate ``pairs``
+    (:func:`connected_components`), keep the minimum-id document of each
+    cluster, and pass through every document that appears in no pair.
+    Returns ``docs`` filtered to survivors (left-anti join on the drop
+    set — documents shuffle only by id, bodies stay put)."""
+    comp = connected_components(pairs, id1, id2)
     drops = comp.filter(F.col("id") != F.col("component")).select(F.col("id").alias(id_col))
     return docs.join(drops, id_col, "left_anti")
 

@@ -26,8 +26,9 @@ Scale notes:
 - k-core and k-truss peel to a fixpoint on
   :func:`~bigdata_hits_spark.plans.iterate.fixpoint`.
 - Label propagation and k-core on at most ``ranking.LOCAL_MAX_EDGES``
-  input rows (the edges, or ``sym`` as passed) run on the driver: one
-  collect of the pinned input, numpy rounds with the same semantics
+  edges (the edge rows, or half the rows of ``sym`` as passed, which
+  holds every edge twice) run on the driver: one collect of the pinned
+  input, numpy rounds with the same semantics
   (:mod:`~bigdata_hits_spark.operators.localgraph`), a one-partition
   result.  Larger inputs run the Spark rounds on the pinned input.
 """
@@ -56,9 +57,10 @@ def symmetric_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
 def _pinned_sym(edges: DataFrame, src: str, dst: str, sym: DataFrame | None):
     """``(edges, sym, local)`` for the loops below: the input they read —
     ``sym`` as passed, else the ``(src, dst)`` edges — pinned, and its
-    symmetric relation on the driver when it fits the local tier."""
+    symmetric relation on the driver when it fits the local tier (``sym``
+    counts each edge twice against the cap)."""
     if sym is not None:
-        sym, local = localgraph.pinned_pairs(sym, "a", "b")
+        sym, local = localgraph.pinned_pairs(sym, "a", "b", symmetric=True)
         return edges, sym, local
     edges, local = localgraph.pinned_pairs(edges, src, dst)
     return edges, None, None if local is None else local.symmetric()
@@ -197,8 +199,7 @@ def persist_triangle_layout(
 ) -> tuple[str, str]:
     """Persist the degree-ordered oriented adjacency as a BUCKETED table
     — the persistent-layout twin of :func:`triangle_counts`'s in-session
-    preparation, following the `persist_ranking_edges` precedent
-    (operators/ranking.py).
+    preparation.
 
     The expensive prefix of the triangle plan — symmetrize + distinct +
     degree count + two orientation joins over the raw edges — is paid
@@ -337,8 +338,8 @@ def label_propagation(
     asserted in tests).  Below the threshold the one-time encode joins
     outweigh the per-round savings (measurements above).
 
-    All of this is the Spark tier.  An input of at most
-    ``ranking.LOCAL_MAX_EDGES`` rows runs the same rounds on the driver
+    All of this is the Spark tier.  A graph of at most
+    ``ranking.LOCAL_MAX_EDGES`` edges runs the same rounds on the driver
     — a ``(node, label)`` count, then min-of-mode, on sorted int codes —
     and returns a one-partition frame."""
     edges, sym, local = _pinned_sym(edges, src, dst, sym)
@@ -415,7 +416,6 @@ def k_core(
     k: int,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 50,
     sym: DataFrame | None = None,
 ) -> DataFrame:
     """(id,) nodes of the ``k``-core: the maximal subgraph where every
@@ -426,23 +426,17 @@ def k_core(
     Peeling loop on :func:`~bigdata_hits_spark.plans.iterate.fixpoint`:
     per round, compute degrees on the surviving symmetric edge set (one
     key-only shuffle) and drop under-degree nodes (semi-join); the
-    harness cuts lineage and stops when the edge count stops moving.  Rounds needed = peeling depth, typically
-    small on real web/dedup graphs; each round's cost shrinks with the
-    surviving edge set.  Deterministic: peeling is simultaneous (all
-    under-k nodes drop each round), which yields the same fixpoint as
-    sequential peeling.
+    harness cuts lineage and stops when the edge count stops moving.
+    Peeling only drops edges, so the loop always terminates and needs no
+    round budget.  Rounds needed = peeling depth, typically small on
+    real web/dedup graphs; each round's cost shrinks with the surviving
+    edge set.  Deterministic: peeling is simultaneous (all under-k nodes
+    drop each round), which yields the same fixpoint as sequential
+    peeling.
 
-    Escalation (same pattern as components.py's star-contraction
-    switch): a pathological graph — a long chain of just-under-k
-    degrees — peels one layer per round, so when ``max_iter`` rounds
-    do not converge the loop re-enters the harness with a round body
-    that DOUBLES the number of lazy peels folded into each round.  Progress per action then grows
-    geometrically and any peeling depth D completes in
-    O(max_iter + log D) actions instead of raising.
-
-    An input of at most ``ranking.LOCAL_MAX_EDGES`` rows peels on the
+    A graph of at most ``ranking.LOCAL_MAX_EDGES`` edges peels on the
     driver instead: simultaneous ``bincount`` degree rounds to the same
-    fixpoint (no round budget needed), one-partition result.
+    fixpoint, one-partition result.
     """
     edges, sym, local = _pinned_sym(edges, src, dst, sym)
     if local is not None:
@@ -459,26 +453,9 @@ def k_core(
             .select("a", "b")
         )
 
-    sym, _, converged = fixpoint(
-        sym, peel_once, DataFrame.count, max_rounds=max_iter, until="stable",
-        name="k_core", strict=False,
+    sym, _, _ = fixpoint(
+        sym, peel_once, DataFrame.count, max_rounds=None, until="stable", name="k_core"
     )
-    if not converged:
-        folds = 1
-
-        def folded(s: DataFrame) -> DataFrame:
-            nonlocal folds
-            folds *= 2
-            for i in range(folds):
-                # Lazy cut between folded peels: each peel's plan stays
-                # 2-joins-1-agg deep however many are batched (a 32-peel
-                # chain would hand Catalyst a ~100-join plan).
-                s = peel_once(s if i == 0 else s.localCheckpoint(eager=False))
-            return s
-
-        sym, _, _ = fixpoint(
-            sym, folded, DataFrame.count, max_rounds=None, until="stable", name="k_core"
-        )
     return sym.select(F.col("a").alias("id")).distinct()
 
 

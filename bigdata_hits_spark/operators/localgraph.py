@@ -84,16 +84,21 @@ class Pairs(NamedTuple):
         return self._replace(a=key // n, b=key % n)
 
 
-def pinned_pairs(df: DataFrame, a: str, b: str) -> tuple[DataFrame, Pairs | None]:
+def pinned_pairs(
+    df: DataFrame, a: str, b: str, symmetric: bool = False
+) -> tuple[DataFrame, Pairs | None]:
     """``df``'s ``(a, b)`` columns pinned with a lazy ``localCheckpoint``,
     and the same pairs on the driver — None above
-    ``ranking.LOCAL_MAX_EDGES`` rows or for ids the encoding refuses.
-    The pin is written by the bounded collect, so a Spark-tier caller
-    reading the pinned frame does not run the upstream plan again."""
+    ``ranking.LOCAL_MAX_EDGES`` edges or for ids the encoding refuses.
+    An edge is a row, or two for a ``symmetric`` relation, which holds
+    every edge in both directions.  The pin is written by the bounded
+    collect, so a Spark-tier caller reading the pinned frame does not
+    run the upstream plan again."""
     from bigdata_hits_spark.operators import ranking
 
+    cap = ranking.LOCAL_MAX_EDGES
     pinned = df.select(a, b).localCheckpoint(eager=False)
-    table = collect_bounded(pinned, ranking.LOCAL_MAX_EDGES)
+    table = collect_bounded(pinned, 2 * cap if symmetric and cap > 0 else cap)
     enc = None if table is None else encode_ids(table.columns)
     if enc is None:
         return pinned, None
@@ -108,21 +113,12 @@ def _min_into(base: np.ndarray, at: np.ndarray, vals: np.ndarray) -> np.ndarray:
     return out
 
 
-def min_label_components(p: Pairs, max_iter: int, escalate: bool) -> np.ndarray:
-    """Component (minimum member code) of every code.  Min-label rounds
-    over the symmetric pairs, counted like the Spark rounds: after
-    ``max_iter`` rounds without a round that changes nothing, raise
-    (``escalate=False``) or continue with pointer jumping (label of the
-    label) to the same fixpoint."""
+def min_label_components(p: Pairs) -> np.ndarray:
+    """Component (minimum member code) of every code: min-label rounds
+    over the symmetric pairs, each followed by pointer jumping (label of
+    the label), to the fixpoint."""
     src, dst = np.concatenate([p.a, p.b]), np.concatenate([p.b, p.a])
     label = np.arange(len(p.ids))
-    for _ in range(max_iter):
-        nxt = _min_into(label, dst, label[src])
-        if not (nxt < label).any():
-            return nxt
-        label = nxt
-    if not escalate:
-        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
     while True:
         nxt = _min_into(label, dst, label[src])
         nxt = nxt[nxt]

@@ -501,74 +501,20 @@ def _prepare(graph: Graph, part_col: str, *rels: DataFrame) -> tuple[DataFrame, 
     return tuple(rel.repartition(parts, part_col).persist() for rel in rels)
 
 
-def _hits_step_relations(graph: Graph, weight: str | None) -> tuple[DataFrame, DataFrame]:
-    """Un-prepared (hub-step, auth-step) relations: hub step joins on dst
-    and emits src; auth step joins on src and emits dst; mult is the edge
-    weight (1.0 for unweighted — ``weighted_hits.py:53,56``)."""
-    edges = graph.edges
-    mult: Column = F.col(weight).cast("double") if weight else F.lit(1.0)
-    eh = edges.select(F.col("dst").alias("key"), F.col("src").alias("out"), mult.alias("mult"))
-    ea = edges.select(F.col("src").alias("key"), F.col("dst").alias("out"), mult.alias("mult"))
-    return eh, ea
-
-
 def _hits_edges(graph: Graph, weight: str | None, mode: str) -> tuple[DataFrame, DataFrame]:
     """(hub-step, auth-step) edge relations for the HITS family, memoized
-    per (graph, weight, mode)."""
+    per (graph, weight, mode): hub step joins on dst and emits src; auth
+    step joins on src and emits dst; mult is the edge weight (1.0 for
+    unweighted — ``weighted_hits.py:53,56``)."""
 
     def build() -> tuple[DataFrame, DataFrame]:
-        eh, ea = _hits_step_relations(graph, weight)
+        edges = graph.edges
+        mult: Column = F.col(weight).cast("double") if weight else F.lit(1.0)
+        eh = edges.select(F.col("dst").alias("key"), F.col("src").alias("out"), mult.alias("mult"))
+        ea = edges.select(F.col("src").alias("key"), F.col("dst").alias("out"), mult.alias("mult"))
         return _prepare(graph, _step_partition_col(mode), eh, ea)
 
     return graph.memo(("hits_edges", weight, mode), build)
-
-
-def persist_ranking_edges(
-    graph: Graph,
-    table_prefix: str,
-    *,
-    weight: str | None = None,
-    buckets: int = 32,
-) -> tuple[str, str]:
-    """Persist the HITS step relations as BUCKETED tables (hash-bucketed
-    on the partition column of the Spark power step the node count
-    selects) — the persistent-layout twin of the in-session
-    :func:`_prepare` repartition, for graphs above LOCAL_MAX_EDGES.
-
-    The prepare shuffle is paid ONCE at write time (e.g. nightly,
-    alongside graph ingestion); every later session attaches the tables
-    (:func:`attach_ranking_edges`) and runs the whole iteration loop with
-    ZERO edge-sized exchange — the bucketed scan already satisfies the
-    grouped sum's distribution (asserted in
-    tests/test_plans.py::test_bucketed_ranking_edges_no_exchange).
-    Returns the (hub, auth) table names."""
-    from bigdata_hits_spark.sources.bucketed import write_bucketed
-
-    eh, ea = _hits_step_relations(graph, weight)
-    col = _step_partition_col(_spark_mode(_nodes_and_mode(graph)[0]))
-    hub_t, auth_t = f"{table_prefix}_hub", f"{table_prefix}_auth"
-    write_bucketed(eh, hub_t, col, buckets)
-    write_bucketed(ea, auth_t, col, buckets)
-    return hub_t, auth_t
-
-
-def attach_ranking_edges(
-    graph: Graph,
-    table_prefix: str,
-    *,
-    weight: str | None = None,
-) -> None:
-    """Seed ``graph``'s memo with bucketed step relations previously
-    written by :func:`persist_ranking_edges`, so :func:`hits` (and the
-    damped variants sharing the HITS edge relations) on a Spark tier
-    skip the in-session prepare-repartition entirely on a COLD session."""
-    from bigdata_hits_spark.sources.bucketed import read_bucketed
-
-    spark = graph.edges.sparkSession
-    eh = read_bucketed(spark, f"{table_prefix}_hub")
-    ea = read_bucketed(spark, f"{table_prefix}_auth")
-    mode = _spark_mode(_nodes_and_mode(graph)[0])
-    graph.memo(("hits_edges", weight, mode), lambda: (eh, ea))
 
 
 def _salsa_edges(graph: Graph, mode: str) -> tuple[DataFrame, DataFrame]:

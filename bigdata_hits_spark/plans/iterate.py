@@ -177,8 +177,8 @@ def fixpoint(
     - **Round budget**: ``max_rounds`` (None = unbounded).  Running out
       raises one error for every loop, ``"<name> did not converge in N
       rounds"``; with ``strict=False`` it returns ``converged=False``
-      instead, for callers that recover (escalate to another
-      algorithm, fold more work per round).
+      instead, for a caller that recovers with another algorithm
+      (connected components switches to star contraction).
 
     The returned state is always the one the last measure read, so its
     checkpoint is already materialized.

@@ -241,25 +241,23 @@ def _components_sql() -> str:
 def q_graph_connected_components(spark, sf_dir):
     """Connected components of the low-weight subgraph of g_pp
     (operators/components.py) — the dedup survivor election's machinery
-    declared directly on a graph with real component structure.  Runs
-    the O(log n)-round STAR CONTRACTION, not the min-label loop: this
-    sparse subgraph sits near the percolation threshold, so its giant
-    component's diameter far exceeds any sane min-label round budget —
-    measured at sf0.1, the auto path burns all 20 min-label rounds and
-    escalates anyway (auto 10.0-15.0 s vs star-direct 7.1-9.6 s,
-    identical 18194 rows / 264 components).  Long-diameter graphs are
-    exactly the regime the star variant exists for; the auto-escalating
-    wrapper remains the right call when the shape is unknown.  The
-    oracle is the recursive-CTE reachability fixpoint (the
-    dedup_semantic pattern); component ids are minimum node ids, a DATA
-    value, so the compare is exact."""
-    from bigdata_hits_spark.operators.components import connected_components_star
+    declared directly on a graph with real component structure, through
+    the same :func:`connected_components` entry point.  The subgraph is
+    far below ``ranking.LOCAL_MAX_EDGES``, so it is labeled on the
+    driver: one collect, pointer-jumping min-label rounds, no Spark job
+    per round, whatever its diameter.  (It sits near the percolation
+    threshold, so its giant component's diameter is long; above the cap
+    the Spark tier would run out of min-label rounds and switch to star
+    contraction.)  The oracle is the recursive-CTE reachability fixpoint
+    (the dedup_semantic pattern); component ids are minimum node ids, a
+    DATA value, so the compare is exact."""
+    from bigdata_hits_spark.operators.components import connected_components
 
     g = derived.g_pp(spark, sf_dir)
     pairs = g.edges.filter(F.col("weight") <= CC_MAX_WEIGHT).select(
         F.col("src").alias("id1"), F.col("dst").alias("id2")
     )
-    return connected_components_star(pairs)
+    return connected_components(pairs)
 
 
 def _clustering_sql() -> str:

@@ -1,11 +1,11 @@
 """Connected components + survivor election for near-dup removal."""
 
-import pytest
 from pyspark.sql import functions as F
 
+from bigdata_hits_spark.operators import components
 from bigdata_hits_spark.operators.components import (
+    _star_components,
     connected_components,
-    connected_components_star,
     dedup_survivors,
 )
 from bigdata_hits_spark.operators.dedup import minhash_near_duplicates
@@ -49,59 +49,47 @@ def test_components_matches_union_find_on_random_graph(spark):
     assert got == _components_bruteforce(pairs)
 
 
-def test_components_nonconvergence_raises_when_escalation_off(spark):
-    df = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "id1 long, id2 long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, max_iter=1, escalate=False)
-    # default behavior: same inputs converge via the star fallback
-    got = {r["id"]: r["component"] for r in connected_components(df, max_iter=1).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1}
-
-
 def test_star_matches_union_find_on_random_graph(spark):
     import random
 
     rng = random.Random(11)
     pairs = [(rng.randrange(50), rng.randrange(50)) for _ in range(60)]
     df = spark.createDataFrame(pairs, "id1 long, id2 long")
-    got = {r["id"]: r["component"] for r in connected_components_star(df).collect()}
+    got = {r["id"]: r["component"] for r in _star_components(df).collect()}
     assert got == _components_bruteforce(pairs)
 
 
-def test_star_converges_on_long_chain_where_label_propagation_cannot(spark):
-    """A 120-node path has diameter 119: min-label needs ~119 rounds
-    (raises at max_iter=15 with escalate=False), star contraction closes
-    it in O(log n)."""
+def test_star_converges_on_long_chain_where_label_propagation_cannot(spark, monkeypatch):
+    """A 120-node path has diameter 119: min-label needs ~119 rounds,
+    star contraction closes it in O(log n) — within 15."""
     chain = [(i, i + 1) for i in range(119)]
     df = spark.createDataFrame(chain, "id1 long, id2 long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, max_iter=15, escalate=False)
-    got = connected_components_star(df, max_iter=15).collect()
+    monkeypatch.setattr(components, "_STAR_ROUNDS", 15)
+    got = _star_components(df).collect()
     assert len(got) == 120
     assert {r["component"] for r in got} == {0}
 
 
-def test_minlabel_auto_escalates_to_star_on_long_chain(spark):
-    """Default connected_components must succeed on a long-diameter graph
-    by falling back to star contraction instead of raising."""
+def test_minlabel_auto_escalates_to_star_on_long_chain(spark, monkeypatch):
+    """connected_components must succeed on a long-diameter graph by
+    falling back to star contraction instead of raising."""
     chain = [(i, i + 1) for i in range(119)]
     df = spark.createDataFrame(chain, "id1 long, id2 long")
-    got = connected_components(df, max_iter=5).collect()
+    monkeypatch.setattr(components, "_MIN_LABEL_ROUNDS", 5)
+    got = connected_components(df).collect()
     assert len(got) == 120
     assert {r["component"] for r in got} == {0}
 
 
 def test_dedup_survivors_long_chain_and_variants(spark):
     """The production path must survive a 120-node chain of duplicate
-    pairs (auto-escalation), and every variant must elect the same
-    minimum-id survivor."""
+    pairs (escalation to star contraction on the Spark tier) and elect
+    the minimum-id survivor."""
     chain = [(i, i + 1) for i in range(119)]
     pairs = spark.createDataFrame(chain, "id1 long, id2 long")
     docs = spark.createDataFrame([(i, f"d{i}") for i in range(125)], "doc_id long, text string")
-    for variant in ("auto", "star"):
-        kept = {r["doc_id"] for r in
-                dedup_survivors(docs, pairs, variant=variant).collect()}
-        assert kept == {0} | set(range(120, 125)), variant
+    kept = {r["doc_id"] for r in dedup_survivors(docs, pairs).collect()}
+    assert kept == {0} | set(range(120, 125))
 
 
 def test_dedup_survivors_end_to_end(spark, sf_dir):

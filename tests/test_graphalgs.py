@@ -210,21 +210,21 @@ def test_k_core_random_matches_bruteforce(spark):
 
 
 def test_k_core_deep_peel_escalates_instead_of_raising(spark):
-    """A long chain peels one layer per round (depth ~n/2 at k=2) — far
-    past max_iter.  The escalating-batch loop must still reach the
-    fixpoint: the chain dissolves, the attached cycle survives."""
+    """A long chain peels one layer per round (depth ~n/2 at k=2).  The
+    peel loop has no round budget, so it must reach the fixpoint: the
+    chain dissolves, the attached cycle survives."""
     from bigdata_hits_spark.operators.graphalgs import k_core
 
     chain = [(f"c{i}", f"c{i+1}") for i in range(120)]  # peel depth ~60
     cycle = [(f"r{i}", f"r{(i+1) % 8}") for i in range(8)]
     bridge = [("r0", "c0")]
     df = spark.createDataFrame(chain + cycle + bridge, "src string, dst string")
-    got = {r["id"] for r in k_core(df, 2, max_iter=4).collect()}
+    got = {r["id"] for r in k_core(df, 2).collect()}
     assert got == {f"r{i}" for i in range(8)}
 
-    # pure chain: the 2-core is empty, again past the action budget
+    # pure chain: the 2-core is empty
     chain_only = spark.createDataFrame(chain, "src string, dst string")
-    assert k_core(chain_only, 2, max_iter=4).count() == 0
+    assert k_core(chain_only, 2).count() == 0
 
 
 def _brute_bfs(pairs, seeds, max_depth):

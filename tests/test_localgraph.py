@@ -8,12 +8,12 @@ import random
 import pyarrow as pa
 import pytest
 
-from bigdata_hits_spark.operators import ranking
+from bigdata_hits_spark.operators import components, localgraph, ranking
 from bigdata_hits_spark.operators.components import (
     connected_components,
     strongly_connected_components,
 )
-from bigdata_hits_spark.operators.graphalgs import k_core, label_propagation
+from bigdata_hits_spark.operators.graphalgs import k_core, label_propagation, symmetric_edges
 from bigdata_hits_spark.operators.localgraph import encode_ids
 
 
@@ -21,10 +21,11 @@ def _edges(kind: str) -> list[tuple]:
     """A seeded digraph over string ids (mixed case, non-ASCII) or long
     ids (both signs, near the 64-bit range): self-loops, duplicate
     edges, 2-cycles, a 4-clique (a non-empty 3-core) and a 16-node
-    chain, twice the 8 min-label rounds :func:`_run_all` budgets for
-    connected components before escalating.  The chain's first 9 edges
-    point one way and close a 6-cycle (a multi-round SCC trim); the
-    rest alternate direction, so SCC trims them in one round."""
+    chain, twice the 8 min-label rounds :func:`test_tiers_agree` lets
+    the Spark tier of connected components run before escalating.  The
+    chain's first 9 edges point one way and close a 6-cycle (a
+    multi-round SCC trim); the rest alternate direction, so SCC trims
+    them in one round."""
     rng = random.Random(5)
     if kind == "string":
         pool = ["a", "A", "b", "B", "Zz", "zz", "é", "e", "中", "ß", "a1", "a10", "a2", ""]
@@ -46,7 +47,7 @@ def _edges(kind: str) -> list[tuple]:
 
 def _run_all(df) -> dict:
     out = {
-        "cc": connected_components(df, "src", "dst", max_iter=8),
+        "cc": connected_components(df, "src", "dst"),
         "scc": strongly_connected_components(df),
         **{f"lp{k}": label_propagation(df, k=k) for k in (1, 3, 6)},
         **{f"kcore{k}": k_core(df, k) for k in (1, 2, 3)},
@@ -56,6 +57,7 @@ def _run_all(df) -> dict:
 
 @pytest.mark.parametrize("kind", ["string", "long"])
 def test_tiers_agree(spark, monkeypatch, kind):
+    monkeypatch.setattr(components, "_MIN_LABEL_ROUNDS", 8)
     edges = _edges(kind)
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
@@ -77,22 +79,34 @@ def test_tiers_agree(spark, monkeypatch, kind):
             assert got[name] == want[name], (tier, name)
 
 
-def test_connected_components_budget_counts_rounds_on_both_tiers(spark, monkeypatch):
-    """A 12-node path takes 11 min-label rounds to settle and a 12th to
-    see nothing change: at ``max_iter=5`` and ``11`` both tiers raise
-    with ``escalate=False``, at ``12`` both converge, and with
-    escalation both reach the same labels past the budget."""
-    df = spark.createDataFrame([(i, i + 1) for i in range(11)], "id1 long, id2 long")
-    for cap in (ranking.LOCAL_MAX_EDGES, -1):
-        monkeypatch.setattr(ranking, "LOCAL_MAX_EDGES", cap)
-        with pytest.raises(RuntimeError, match="connected_components did not converge in 5 rounds"):
-            connected_components(df, max_iter=5, escalate=False)
-        got = {tuple(r) for r in connected_components(df, max_iter=5).collect()}
-        assert got == {(i, 0) for i in range(12)}, cap
-        with pytest.raises(RuntimeError, match="did not converge in 11 rounds"):
-            connected_components(df, max_iter=11, escalate=False)
-        got = {tuple(r) for r in connected_components(df, max_iter=12, escalate=False).collect()}
-        assert got == {(i, 0) for i in range(12)}, cap
+def test_symmetric_input_capped_by_edge_count(spark, monkeypatch):
+    """A ``sym=`` relation holds every edge twice, so it is held to twice
+    the cap: with the cap between the edge count and the ``sym`` row
+    count, label propagation and k-core still run on the driver, and
+    return what the Spark tier does."""
+    edges = spark.createDataFrame(_edges("string"), "src string, dst string")
+    sym = symmetric_edges(edges)
+    n_sym = sym.count()
+    cases = {
+        "label_propagation": lambda: label_propagation(edges, k=3, sym=sym),
+        "k_core": lambda: k_core(edges, 2, sym=sym),
+    }
+    monkeypatch.setattr(ranking, "LOCAL_MAX_EDGES", -1)
+    want = {name: sorted(tuple(r) for r in run().collect()) for name, run in cases.items()}
+    ran = []
+
+    def spy(name, real):
+        def run(*args):
+            ran.append(name)
+            return real(*args)
+        return run
+
+    for name in cases:
+        monkeypatch.setattr(localgraph, name, spy(name, getattr(localgraph, name)))
+    monkeypatch.setattr(ranking, "LOCAL_MAX_EDGES", n_sym // 2 + 1)
+    got = {name: sorted(tuple(r) for r in run().collect()) for name, run in cases.items()}
+    assert ran == list(cases)
+    assert got == want and all(want.values())
 
 
 def test_encode_ids_sorted_and_refusals():

@@ -209,47 +209,6 @@ def test_power_step_shuffle_mode_has_no_broadcast(spark, sf_dir_oracle):
     assert "InMemoryTableScan" in plan
 
 
-def test_bucketed_ranking_edges_no_exchange(spark, sf_dir_oracle, monkeypatch):
-    """Prepared HITS step relations persisted as bucketed tables must run
-    the power step with ZERO edge-sized shuffle on a cold session — the
-    bucketed scan satisfies the grouped sum's distribution, so the only
-    exchange left is the broadcast of the (node-sized) score vector.
-    The test graph is below LOCAL_MAX_EDGES, so the cap is lowered to
-    rank it on the Spark tier the bucketed layout serves."""
-    from pyspark.sql import functions as F
-
-    from bigdata_hits_spark.operators import ranking
-    from bigdata_hits_spark.operators.ranking import (
-        _hits_edges,
-        _step,
-        attach_ranking_edges,
-        hits,
-        persist_ranking_edges,
-    )
-    from bigdata_hits_spark.sources.derived import _g_ps
-
-    monkeypatch.setattr(ranking, "LOCAL_MAX_EDGES", -1)
-    g = _g_ps(spark, sf_dir_oracle)
-    g2 = _g_ps(spark, sf_dir_oracle)  # fresh graph: no in-session prepared state
-    try:
-        persist_ranking_edges(g, "t_rank_edges", buckets=8)
-        attach_ranking_edges(g2, "t_rank_edges")
-        eh, _ea = _hits_edges(g2, None, "broadcast")
-        scores = g2.nodes.select("id", F.lit(1.0).alias("score"))
-        plan = _step(eh, scores, "broadcast")._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan, plan
-
-        # end-to-end: the bucketed-edge loop computes the same ranking
-        a = {(r["id"], round(r["score"], 7)) for r in hits(g, k=3).auths.collect()}
-        b = {(r["id"], round(r["score"], 7)) for r in hits(g2, k=3).auths.collect()}
-        assert a == b and len(a) > 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_rank_edges_hub")
-        spark.sql("DROP TABLE IF EXISTS t_rank_edges_auth")
-        g.release()
-        g2.release()
-
-
 def test_time_partitioned_scan_prunes(spark, sf_dir_oracle, tmp_path):
     """A date filter over the time-partitioned events layout must prune at
     PLANNING time: PartitionFilters carries the predicate, the data-filter
@@ -702,10 +661,12 @@ def test_minhash_near_duplicates_job_count(spark, sf_dir_oracle):
 _LOCAL_LOOP_JOBS = 2
 
 
-def test_graph_loops_local_tier_jobs(spark, monkeypatch, tmp_path):
+def test_graph_loops_local_tier_jobs(spark, sf_dir_oracle, monkeypatch, tmp_path):
     """Connected components, SCC, label propagation and k-core on a
     small graph are one collect and one write; with the cap at -1 the
-    same calls run the Spark loops, which cost more jobs than that."""
+    same calls run the Spark loops, which cost more jobs than that.  The
+    declared components row over the session's warm ``g_pp`` is held to
+    the same ceiling."""
     import random
 
     from bigdata_hits_spark.operators import ranking
@@ -714,6 +675,7 @@ def test_graph_loops_local_tier_jobs(spark, monkeypatch, tmp_path):
         strongly_connected_components,
     )
     from bigdata_hits_spark.operators.graphalgs import k_core, label_propagation
+    from bigdata_hits_spark.queries_graph import q_graph_connected_components
 
     rng = random.Random(3)
     pairs = sorted({(f"v{rng.randrange(60)}", f"v{rng.randrange(60)}") for _ in range(150)})
@@ -726,11 +688,18 @@ def test_graph_loops_local_tier_jobs(spark, monkeypatch, tmp_path):
         "k_core": lambda: k_core(edges, 3),
     }
     failures = []
-    for cap in (ranking.LOCAL_MAX_EDGES, -1):
+    default_cap = ranking.LOCAL_MAX_EDGES
+    for cap in (default_cap, -1):
         monkeypatch.setattr(ranking, "LOCAL_MAX_EDGES", cap)
         for name, loop in loops.items():
             out = str(tmp_path / f"{name}_{cap}")
             n = _jobs(spark, lambda: loop().write.parquet(out))
             if (n > _LOCAL_LOOP_JOBS) != (cap < 0):
                 failures.append(f"cap {cap} {name}: {n} jobs (local ceiling {_LOCAL_LOOP_JOBS})")
+    monkeypatch.setattr(ranking, "LOCAL_MAX_EDGES", default_cap)
+    derived.g_pp(spark, sf_dir_oracle)  # built outside the count, as on a warm pass
+    out = str(tmp_path / "graph_connected_components")
+    n = _jobs(spark, lambda: q_graph_connected_components(spark, sf_dir_oracle).write.parquet(out))
+    if n > _LOCAL_LOOP_JOBS:
+        failures.append(f"graph_connected_components: {n} jobs (local ceiling {_LOCAL_LOOP_JOBS})")
     assert not failures, "\n".join(failures)
